@@ -46,12 +46,14 @@ TABLES = (
 ).split()
 
 
-#: Spread is OPT-IN per query (measured r13): it wins only where ONE heavy
-#: map pass feeds ONE consumer (gopher_filter 0.54x, ngram_novelty 0.49x,
-#: language_id 0.85x, knn_cos 0.86x in paired A/B). Queries that reference
-#: the scan from several subplans (dsir 1.61x, bm25_prf 1.55x) or whose map
-#: work is trivial (clean_text 1.98x) pay the extra exchange with no gain.
-_SPREAD_TABLES: frozenset[str] = frozenset()
+#: Spread is OPT-IN per query via `_t(..., spread=True)` (measured r13): it
+#: wins only where ONE heavy map pass feeds ONE consumer (gopher_filter
+#: 0.54x, ngram_novelty 0.49x, language_id 0.85x, knn_cos 0.86x in paired
+#: A/B). Queries that reference the scan from several subplans (dsir 1.61x,
+#: bm25_prf 1.55x) or whose map work is trivial (clean_text 1.98x) pay the
+#: extra exchange with no gain. Each spread partition targets at least this
+#: many input bytes (see `_spread`).
+SPREAD_TARGET_BYTES = 32 << 10
 
 
 def _spread(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
@@ -69,10 +71,8 @@ def _spread(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     pushed-down) scan output to recover the cluster's parallelism. Round-robin
     keeps results partition-independent (and Spark's sort-before-repartition
     keeps retries deterministic)."""
-    import os as _os
-
     try:
-        size = _os.path.getsize(path)
+        size = os.path.getsize(path)
     except OSError:
         return df  # non-local path: layout unknown, keep the plain scan
     cores = spark.sparkContext.defaultParallelism
@@ -87,16 +87,10 @@ def _spread(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     # bench SF — per-task scheduling + Arrow/python-worker overhead outweighed
     # the extra slots (interleaved paired A/B at c32: n=16 ran 0.75x vs n=32
     # on decontaminate AND decontaminate_bloom mins). Each spread partition
-    # now targets >= SPREAD_TARGET_BYTES of input (default 32 KiB), still
-    # clamped to [2, cores]; a 100 TB input never reaches this branch (the
-    # scan already splits), so the constant only shapes small under-split
-    # inputs. Hatch: SPARK_GRAFT_SPREAD_BYTES=0 restores repartition(cores).
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_SPREAD_BYTES", "1") == "0":
-        return df.repartition(cores)
-    target = int(_os.environ.get("SPARK_GRAFT_SPREAD_TARGET_BYTES", str(32 << 10)))
-    return df.repartition(max(2, min(cores, size // max(1, target))))
+    # now targets >= SPREAD_TARGET_BYTES of input (32 KiB), still clamped to
+    # [2, cores]; a 100 TB input never reaches this branch (the scan already
+    # splits), so the constant only shapes small under-split inputs.
+    return df.repartition(max(2, min(cores, size // SPREAD_TARGET_BYTES)))
 
 
 #: Session-scoped scan-plan memo (r13, guide §6 file-listing caching / §1.2
@@ -106,7 +100,8 @@ def _spread(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
 #: IMMUTABLE scan DataFrame (a logical plan — never data or results) keyed on
 #: (applicationId, path), exactly the metadata Spark itself caches per
 #: session in its file-source cache; every execution still reads the parquet
-#: bytes. A new session (fresh applicationId) re-reads all footers.
+#: bytes. A new session (fresh applicationId) re-reads all footers, and its
+#: first insert drops every entry of earlier applications.
 _SCAN_MEMO: dict[tuple, DataFrame] = {}
 
 
@@ -118,15 +113,19 @@ def _read_parquet_memo(spark: SparkSession, path: str) -> DataFrame:
         mtime = os.path.getmtime(path)
     except OSError:
         mtime = None  # non-local path: immutability is the caller's contract
-    key = (spark.sparkContext.applicationId, path, mtime)
+    app = spark.sparkContext.applicationId
+    key = (app, path, mtime)
     df = _SCAN_MEMO.get(key)
     if df is None:
         df = spark.read.parquet(path)
+        for k in list(_SCAN_MEMO):  # list() snapshots atomically
+            if k[0] != app:
+                _SCAN_MEMO.pop(k, None)
         _SCAN_MEMO[key] = df
     return df
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str, spread: bool | None = None) -> DataFrame:
+def _t(spark: SparkSession, sf_dir: str, name: str, spread: bool = False) -> DataFrame:
     # the driver supplies its own SparkSession; make sure executors can import
     # this package inside pandas-UDF queries regardless of driver cwd, and pin
     # UTC so timestamp rendering matches the (timezone-naive) DuckDB oracle
@@ -136,12 +135,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str, spread: bool | None = None) 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = f"{sf_dir}/{name}.parquet"
     df = _read_parquet_memo(spark, path)
-    if spread is None:
-        spread = name in _SPREAD_TABLES
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_SPREAD", "1") == "0":  # A/B + debugging hatch
-        spread = False
     return _spread(spark, df, path) if spread else df
 
 
@@ -642,10 +635,7 @@ def q_hash_banded_join(spark: SparkSession, sf: str) -> DataFrame:
     # so filter BEFORE the kernel: the predicate lands in the parquet scan
     # (PushedFilters) and the kernel hashes 300 docs instead of the corpus.
     # Per-doc function => identical rows (filter-before == filter-after).
-    # Hatch: SPARK_GRAFT_HBJ_PREFILTER=0 restores the full-table kernel.
-    docs = _t(spark, sf, "documents")
-    if os.environ.get("SPARK_GRAFT_HBJ_PREFILTER", "1") != "0":
-        docs = docs.where(F.col("doc_id") < 300)
+    docs = _t(spark, sf, "documents").where(F.col("doc_id") < 300)
     sigs = D.simhash(docs)
     store = sigs.where(F.col("doc_id") < 150)
     batch = sigs.where((F.col("doc_id") >= 140) & (F.col("doc_id") < 300))
@@ -1263,8 +1253,8 @@ def q_duplication_share(spark: SparkSession, sf: str) -> DataFrame:
     ratio."""
     # r14: spread=True — re-measured under the cold-per-iteration cache
     # contract (the r13 rejection was measured with warm iterations hiding
-    # the single-task shingle pass): 0.73x monkeypatch-paired, 0.67x via the
-    # SPARK_GRAFT_SPREAD hatch A/B. The rest of the minhash/ngram family
+    # the single-task shingle pass): 0.73x monkeypatch-paired, 0.67x in an
+    # env-switched spread on/off A/B. The rest of the minhash/ngram family
     # re-measured neutral (0.99-1.03x) and stays unspread.
     docs = _t(spark, sf, "documents", spread=True)
     out = D.doc_duplication_share(docs)
@@ -1561,9 +1551,8 @@ def q_ivf_pq_search(spark: SparkSession, sf: str) -> DataFrame:
     # first-wins argmin, elementwise double subtraction — Python floats ARE
     # IEEE doubles, so the values are bit-identical (pinned by
     # tests/test_plans.py::test_ivf_pq_codebook_driver_replay).
-    one_collect = os.environ.get("SPARK_GRAFT_IVFPQ_ONECOLLECT", "1") != "0"
     rows8 = (
-        emb.where(F.col("vec_id") < (8 if one_collect else 4))
+        emb.where(F.col("vec_id") < 8)
         .orderBy("vec_id")
         .select("vec_id", "embedding")
         .collect()
@@ -1581,28 +1570,20 @@ def q_ivf_pq_search(spark: SparkSession, sf: str) -> DataFrame:
     )
     dim = len(coarse[0])
     bounds = PQ.split_bounds(dim, 4)
-    if not one_collect:  # A/B hatch: the pre-pass-5 second collect
-        cb_rows = with_res.where(F.col("vec_id") < 8).select("vec_id", "rv").collect()
-        rows = []
-        for r in sorted(cb_rows, key=lambda r: r["vec_id"]):
-            rv = [float(x) for x in r["rv"]]
-            for s, (lo, hi) in enumerate(bounds):
-                rows.append((s, int(r["vec_id"]), rv[lo:hi]))
-    else:
-        rows = []
-        for r in rows8:  # already vec_id-ascending
-            v = [float(x) for x in r["embedding"]]
-            best_d, best_i = float("inf"), -1
-            for i, c in enumerate(coarse):
-                s = 0.0
-                for a, b in zip(v, c):
-                    d = a - b
-                    s += d * d
-                if s < best_d:
-                    best_d, best_i = s, i
-            rv = [a - b for a, b in zip(v, coarse[best_i])]
-            for s_i, (lo, hi) in enumerate(bounds):
-                rows.append((s_i, int(r["vec_id"]), rv[lo:hi]))
+    rows = []
+    for r in rows8:  # already vec_id-ascending
+        v = [float(x) for x in r["embedding"]]
+        best_d, best_i = float("inf"), -1
+        for i, c in enumerate(coarse):
+            s = 0.0
+            for a, b in zip(v, c):
+                d = a - b
+                s += d * d
+            if s < best_d:
+                best_d, best_i = s, i
+        rv = [a - b for a, b in zip(v, coarse[best_i])]
+        for s_i, (lo, hi) in enumerate(bounds):
+            rows.append((s_i, int(r["vec_id"]), rv[lo:hi]))
     cb = spark.createDataFrame(rows, "subvector_id int, centroid_id int, c array<double>")
     coded = PQ.quantize(with_res, cb, vec_col="rv", dim=dim, formulation="direct")
     qv = _hash_embed_py(IVF_QUERY_TEXT, dim=dim)
@@ -1643,9 +1624,8 @@ def q_hnsw_recall(spark: SparkSession, sf: str) -> DataFrame:
         "query_id", "vec_id", F.col("distance").alias("l2sq_distance"),
         F.col("rank").cast("bigint").alias("rnk"),
     )
-    overlap = os.environ.get("SPARK_GRAFT_HNSW_OVERLAP", "1") != "0"
     with ThreadPoolExecutor(max_workers=1) as pool:
-        f_exact = pool.submit(exact_sel.collect) if overlap else None
+        f_exact = pool.submit(exact_sel.collect)
 
         shards = H.build_hnsw_shards(
             data, vec_col="embedding", id_col="vec_id", n_shards=8, m=12,
@@ -1658,7 +1638,7 @@ def q_hnsw_recall(spark: SparkSession, sf: str) -> DataFrame:
         got: dict[int, set[int]] = {}
         for r in H.hnsw_topk_batch(shards, queries, k=10, ef=64, id_col="vec_id").collect():
             got.setdefault(int(r["query_id"]), set()).add(int(r["vec_id"]))
-        exact_rows = f_exact.result() if overlap else exact_sel.collect()
+        exact_rows = f_exact.result()
     truth: dict[int, set[int]] = {}
     for r in exact_rows:
         truth.setdefault(int(r["query_id"]), set()).add(int(r["vec_id"]))

@@ -20,6 +20,7 @@ import json
 import os
 import re
 import shutil
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,6 +35,10 @@ class CollectionStore:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
+        # serializes insert's read-max-then-append: the HTTP server handles
+        # requests on concurrent threads, and two id-less inserts reading
+        # the same max would assign the same ids
+        self._insert_lock = threading.Lock()
         os.makedirs(root, exist_ok=True)
 
     _NAME_RE = re.compile(r"^[A-Za-z0-9_.-]+$")
@@ -93,18 +98,19 @@ class CollectionStore:
     def insert(self, name: str, rows: list[dict]) -> int:
         """Bulk insert (S12 analog): dict rows with auto-assigned ascending ids;
         missing columns null; metadata dicts serialized to JSON text."""
-        cur = self.read(name)
-        start = (cur.agg(F.max("id")).first()[0] or 0) + 1
-        cols = [f.name for f in cur.schema.fields]
-        prepared = []
-        for i, r in enumerate(rows):
-            r = dict(r)
-            r.setdefault("id", start + i)
-            if isinstance(r.get("metadata"), (dict, list)):
-                r["metadata"] = json.dumps(r["metadata"])
-            prepared.append(tuple(r.get(c) for c in cols))
-        new = self.spark.createDataFrame(prepared, cur.schema)
-        new.write.mode("append").parquet(self._path(name))
+        with self._insert_lock:
+            cur = self.read(name)
+            start = (cur.agg(F.max("id")).first()[0] or 0) + 1
+            cols = [f.name for f in cur.schema.fields]
+            prepared = []
+            for i, r in enumerate(rows):
+                r = dict(r)
+                r.setdefault("id", start + i)
+                if isinstance(r.get("metadata"), (dict, list)):
+                    r["metadata"] = json.dumps(r["metadata"])
+                prepared.append(tuple(r.get(c) for c in cols))
+            new = self.spark.createDataFrame(prepared, cur.schema)
+            new.write.mode("append").parquet(self._path(name))
         return len(rows)
 
     # -- H4: drop --------------------------------------------------------

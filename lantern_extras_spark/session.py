@@ -73,11 +73,7 @@ def get_spark(app_name: str = "lantern-extras-spark", shuffle_partitions: int | 
         # while the one real winner (salted_join, 0.39x isolated) gets an
         # explicit SHUFFLE_HASH hint at its call site instead: the join whose
         # build side is bounded BY CONSTRUCTION is hinted; everything else
-        # keeps the planner default. Env hatch kept for future A/B.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "true"),
-        )
+        # keeps Spark's default (preferSortMergeJoin=true).
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")

@@ -18,7 +18,7 @@ def frames(spark):
     return big, keys
 
 
-def test_semi_exact_all_modes(spark, frames):
+def test_semi_exact_all_modes(spark, frames, monkeypatch):
     big, keys = frames
     want = sorted(r["k"] for r in big.join(keys, "k", "left_semi").collect())
     for mode in ("literal", "subquery", "broadcast"):
@@ -26,19 +26,25 @@ def test_semi_exact_all_modes(spark, frames):
             r["k"] for r in BL.bloom_semi_join(big, keys, "k", mode=mode).collect()
         )
         assert got == want, mode
+    # auto past the literal tier takes the broadcast probe
+    monkeypatch.setattr(BL, "LITERAL_MAX_WORDS", 0)
+    auto = big.where(BL.bloom_might_contain(BL.bloom_build(keys, "k"), "k"))
+    assert "ArrowEvalPython" in auto._jdf.queryExecution().executedPlan().toString()
+    assert sorted(r["k"] for r in auto.join(keys, "k", "left_semi").collect()) == want
 
 
 def test_subquery_mode_keeps_plan_small(spark, frames):
     """r13: a mid-sized bitmap must ride a scalar subquery, not a plan
     literal — the literal form repeated the whole word array once per
     double-hash probe (bloom_semi_join's plan measured 1.2 MB of text).
-    Pin: auto picks subquery above LITERAL_MAX_WORDS, the probe plan stays
-    orders of magnitude below the literal's footprint, and membership is
-    bit-identical to the literal path."""
+    Pin: for a filter above LITERAL_MAX_WORDS (where auto picks broadcast
+    and `decontaminate` requests subquery explicitly), the subquery probe
+    plan stays orders of magnitude below the literal's footprint, and
+    membership is bit-identical to the literal path."""
     big, _ = frames
     keys = spark.range(0, 40000, 7).select(F.col("id").alias("k"))
     bf = BL.bloom_build(keys, "k")
-    assert len(bf.words) > BL.LITERAL_MAX_WORDS  # mid-sized: auto → subquery
+    assert len(bf.words) > BL.LITERAL_MAX_WORDS  # mid-sized: past the literal tier
     sub = big.where(BL.bloom_might_contain(bf, "k", mode="subquery"))
     plan = sub._jdf.queryExecution().executedPlan().toString()
     assert "Subquery" in plan

@@ -44,6 +44,46 @@ def test_insert_auto_ids_and_metadata(store):
     assert store.read("c").agg(F.max("id")).first()[0] == 3
 
 
+def test_concurrent_insert_assigns_unique_ids(store, monkeypatch):
+    """CollectionServer serves requests on concurrent threads: two id-less
+    inserts into one collection must not both read the same max(id)."""
+    import threading
+
+    store.create_collection("c")
+    # both inserts reach their max(id) read before either appends, unless
+    # the store serializes them (then the barrier times out and each
+    # insert proceeds alone)
+    barrier = threading.Barrier(2, timeout=2)
+    read = store.read
+
+    def racing_read(name):
+        try:
+            barrier.wait()
+        except threading.BrokenBarrierError:
+            pass
+        return read(name)
+
+    monkeypatch.setattr(store, "read", racing_read)
+    errors = []
+
+    def put(tag):
+        try:
+            store.insert("c", [{"vector": [1.0], "data": f"{tag}{i}"} for i in range(3)])
+        except Exception as e:  # surfaced below; a thread swallows it otherwise
+            errors.append(e)
+
+    threads = [threading.Thread(target=put, args=(t,)) for t in "ab"]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    ids = [r["id"] for r in read("c").collect()]
+    assert len(ids) == 6
+    assert len(set(ids)) == 6, sorted(ids)
+
+
 def test_search_exact_zero_row(store):
     """FIXTURES.md §5: an exact-zero query must return the zero row first with
     distance 0."""

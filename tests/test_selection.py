@@ -402,15 +402,23 @@ def test_onepass_materialization_matches_recompute(spark, mixed, monkeypatch):
             ).collect()
         )
 
-    monkeypatch.setenv("SPARK_GRAFT_DSIR_ONEPASS", "1")
     one = weights()
-    monkeypatch.setenv("SPARK_GRAFT_DSIR_ONEPASS", "0")
+    # over-cap: probe forces the recompute shape, values unchanged
+    monkeypatch.setattr(SEL, "DSIR_MAT_MAX_DOCS", 1)
     two = weights()
     assert one == two
-    # over-cap: probe forces the recompute shape, values unchanged
-    monkeypatch.setenv("SPARK_GRAFT_DSIR_ONEPASS", "1")
-    monkeypatch.setenv("SPARK_GRAFT_DSIR_MAT_MAX_DOCS", "1")
-    assert weights() == two
+
+
+def test_probe_memo_drops_stale_applications(spark, mixed):
+    """A long-running process must not keep probe decisions of stopped
+    applications: inserting the live application's entry evicts them."""
+    stale = ("app-stopped-long-ago", 1, 0)
+    SEL._PROBE_MEMO[stale] = True
+    # a cap no other caller uses, so the call below is an insert
+    SEL._probe_under_cap(mixed.select("doc_id"), 7_777_777)
+    assert stale not in SEL._PROBE_MEMO
+    app = spark.sparkContext.applicationId
+    assert SEL._PROBE_MEMO and all(k[0] == app for k in SEL._PROBE_MEMO)
 
 
 def test_scoped_persist_bounds_cache_growth(spark, mixed):
@@ -434,31 +442,16 @@ def test_scoped_persist_bounds_cache_growth(spark, mixed):
 
 def test_dsir_cutoff_jobcut_matches_checkpoint_path(spark, mixed):
     """r14: the scoped-persist cutoff (no survivor localCheckpoint, memoized
-    probe) must select the identical rows as the r13 checkpoint shape."""
-    import os
-
-    from lantern_extras_spark.operators import selection as SEL
-
-    prev = os.environ.get("SPARK_GRAFT_DSIR_JOBCUT")
-    try:
-        os.environ["SPARK_GRAFT_DSIR_JOBCUT"] = "0"
-        old = sorted(
+    probe) must select the identical full rows as the TakeOrderedAndProject
+    reference."""
+    def select(small_n_max):
+        return sorted(
             map(tuple, SEL.dsir_select(
-                mixed, None, n=25, buckets=256, small_n_max=0,
+                mixed, None, n=25, buckets=256, small_n_max=small_n_max,
                 target_filter=F.col("doc_id") < 20,
             ).collect())
         )
-        os.environ["SPARK_GRAFT_DSIR_JOBCUT"] = "1"
-        new = sorted(
-            map(tuple, SEL.dsir_select(
-                mixed, None, n=25, buckets=256, small_n_max=0,
-                target_filter=F.col("doc_id") < 20,
-            ).collect())
-        )
-    finally:
-        if prev is None:
-            os.environ.pop("SPARK_GRAFT_DSIR_JOBCUT", None)
-        else:
-            os.environ["SPARK_GRAFT_DSIR_JOBCUT"] = prev
-    assert len(new) == 25
-    assert new == old
+
+    cut = select(0)
+    assert len(cut) == 25
+    assert cut == select(100_000)

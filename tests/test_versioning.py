@@ -166,34 +166,29 @@ def test_ngram_jaccard_join_cross_corpus_only(spark):
 
 
 def test_ngram_jaccard_join_count_path_matches_full_verify(spark):
-    """r14 (ADVICE): the counted-intersection default (SPARK_GRAFT_NGJ_COUNT=1)
-    and the full-set verification hatch path (=0) must produce identical
-    (id_a, id_b, jaccard) multisets — pins both shapes against drift, the
-    way test_onepass_materialization_matches_recompute pins the dsir paths."""
-    import os
-
+    """r14 (ADVICE): the counted-intersection path (max_df=None) and the
+    full-set verification path (any max_df) must produce identical
+    (id_a, id_b, jaccard) multisets when max_df prunes nothing — pins both
+    shapes against drift, the way
+    test_onepass_materialization_matches_recompute pins the dsir paths."""
     from lantern_extras_spark.operators.dedup import ngram_jaccard_join
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     a = docs.where("doc_id < 120")
     b = docs.where("doc_id >= 80 and doc_id < 240")
-    prev = os.environ.get("SPARK_GRAFT_NGJ_COUNT")
-    try:
-        os.environ["SPARK_GRAFT_NGJ_COUNT"] = "1"
-        counted = sorted(
-            (r["id_a"], r["id_b"], round(r["jaccard"], 12))
-            for r in ngram_jaccard_join(a, b, threshold=0.2).collect()
-        )
-        os.environ["SPARK_GRAFT_NGJ_COUNT"] = "0"
-        full = sorted(
-            (r["id_a"], r["id_b"], round(r["jaccard"], 12))
-            for r in ngram_jaccard_join(a, b, threshold=0.2).collect()
-        )
-    finally:
-        if prev is None:
-            os.environ.pop("SPARK_GRAFT_NGJ_COUNT", None)
-        else:
-            os.environ["SPARK_GRAFT_NGJ_COUNT"] = prev
+    # a shingle's combined posting count is at most one per input doc, so
+    # this max_df routes through full-set verification without pruning
+    no_prune = a.count() + b.count()
+    counted = sorted(
+        (r["id_a"], r["id_b"], round(r["jaccard"], 12))
+        for r in ngram_jaccard_join(a, b, threshold=0.2).collect()
+    )
+    full = sorted(
+        (r["id_a"], r["id_b"], round(r["jaccard"], 12))
+        for r in ngram_jaccard_join(
+            a, b, threshold=0.2, max_df=no_prune
+        ).collect()
+    )
     assert counted, "fixture produced no pairs — threshold/slice drifted"
     assert counted == full
 
