@@ -1,7 +1,7 @@
 """lantern_extras_spark — a PySpark-native engine with the capability surface of
 lanterndata/lantern_extras (embedding pipelines, vector search, product quantization,
 recall evaluation, incremental jobs) plus large-scale training-data pipeline operators
-(dedup, similarity search, text analysis, multimodal plumbing).
+(dedup, similarity search, text analysis, image fetch → decode → CLIP features).
 
 Not a port: the reference (see /root/reference, SURVEY.md) delegates relational work to
 Postgres and ANN to usearch; here everything is expressed against the Spark DataFrame API

@@ -747,7 +747,7 @@ def hash_neardup_join(
     max_band_freq: int | None = None,
 ) -> DataFrame:
     """Cross-frame banded Hamming join: match an ARRIVING batch of hashes
-    (image pHash / audio fingerprint / any fixed-width signature) against a
+    (image pHash/dHash or any fixed-width signature) against a
     persisted corpus store WITHOUT rescanning or all-pairs work — the
     incremental-ingest twin of `hash_neardup_pairs`, mirroring
     `minhash_dedup_incremental`'s batch-vs-store stance: at 100 TB the

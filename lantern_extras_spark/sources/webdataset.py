@@ -1,13 +1,13 @@
 """WebDataset tar-shard reader — the de-facto multimodal training format.
 
-Large image/audio-text corpora (LAION-scale) ship as thousands of .tar
+Large image-text corpora (LAION-scale) ship as thousands of .tar
 shards whose members group by basename: `000123.jpg` + `000123.txt` +
 `000123.json` are ONE sample keyed `000123` (the public WebDataset
 convention: the key is the path up to the FIRST dot of the last path
 segment, so `a/b.c.jpg` has key `a/b` and extension `c.jpg`). This module
 reads shards into one row per sample with a map of extension → bytes,
-feeding the multimodal kernels (decode_image_features, audio_frame_energy,
-clip_preprocess) and the text pipeline directly.
+feeding the image kernels (decode_image_features, clip_preprocess,
+image_phash) and the text pipeline directly.
 
 Spark design — same stance as sources/vecs.py and sources/warc.py: shards
 arrive through `binaryFile`, ONE TASK PER SHARD (tar has no central index;

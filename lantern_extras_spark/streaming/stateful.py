@@ -1537,7 +1537,7 @@ def ingest_hash_batch(
     max_band_freq: int | None = None,
 ) -> None:
     """One micro-batch of the incremental MEDIA-HASH dedup loop — the
-    perceptual-hash (pHash/dHash/audio-fingerprint) member of the streaming
+    perceptual-hash (pHash/dHash) member of the streaming
     store family, mirroring `ingest_dedup_batch`'s contract exactly: match
     the arriving batch against the persisted (id, hash) store via
     `hash_neardup_join` (banded Hamming, never a rescan), drop within-batch
