@@ -46,18 +46,13 @@ def ingest_batch(spark, store_path: str, batch, threshold: float = 0.35) -> dict
     """One ingestion step: returns {'accepted': [...], 'dropped': {id: reason}}."""
     df = spark.createDataFrame(batch, "doc_id long, text string")
     new_sigs = D.minhash_signatures(df).select("doc_id", "sig")
-    if os.path.exists(store_path):
-        store = spark.read.parquet(store_path)
-        pairs = D.minhash_dedup_incremental(df, store, threshold=threshold)
-        dropped = {
-            r["id_b"]: f"{r['vs']}:{r['id_a']}@{r['jaccard']:.2f}"
-            for r in pairs.collect()
-        }
-    else:
-        pairs = D.minhash_dedup(df, threshold=threshold, verify="signature")
-        dropped = {
-            r["id_b"]: f"batch:{r['id_a']}@{r['jaccard']:.2f}" for r in pairs.collect()
-        }
+    # no store yet is an empty store: the first batch takes the same path
+    store = (spark.read.parquet(store_path) if os.path.exists(store_path)
+             else spark.createDataFrame([], new_sigs.schema))
+    pairs = D.minhash_dedup_incremental(df, store, threshold=threshold)
+    dropped = {
+        r["id_b"]: f"{r['vs']}:{r['id_a']}@{r['jaccard']:.2f}" for r in pairs.collect()
+    }
     survivors = new_sigs.join(
         spark.createDataFrame([(i,) for i in dropped], "doc_id long"),
         "doc_id",

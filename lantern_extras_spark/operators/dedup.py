@@ -172,23 +172,21 @@ def band_keys(
     """(id, band_idx, band_key) — the LSH banding of a signature table.
     `band_key` is the '_'-joined run of n_hashes//bands signature values.
     This IS the table a persistent dedup index stores: an incremental batch
-    joins its own band keys against it instead of re-banding the corpus."""
+    joins its own band keys against it instead of re-banding the corpus.
+
+    Rows with a null `sig` (empty documents) get no band rows: they would
+    all share one '' bucket per band and can never verify."""
     rows_per_band = n_hashes // bands
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_idx"),
-                F.concat_ws(
-                    "_", *[F.col("sig")[b * rows_per_band + r] for r in range(rows_per_band)]
-                ).alias("band_key"),
-            )
-            for b in range(bands)
-        ]
+    # one SQL expression: built Column by Column, the bands × rows element
+    # accessors cost ~100 py4j round trips per call
+    structs = ", ".join(
+        f"named_struct('band_idx', {b}, 'band_key', concat_ws('_', "
+        + ", ".join(f"sig[{b * rows_per_band + r}]" for r in range(rows_per_band))
+        + "))"
+        for b in range(bands)
     )
-    return (
-        sigs.select(id_col, band_structs.alias("bands"))
-        .select(id_col, F.explode("bands").alias("b"))
-        .select(id_col, F.col("b.band_idx").alias("band_idx"), F.col("b.band_key").alias("band_key"))
+    return sigs.where(F.col("sig").isNotNull()).selectExpr(
+        f"`{id_col}`", f"inline(array({structs}))"
     )
 
 
@@ -237,7 +235,7 @@ def save_band_store(
     """Persist a corpus's LSH band keys as a BUCKETED table — the storage
     layout that makes the incremental-dedup equi-join shuffle-free on the
     corpus side. `minhash_dedup_incremental`'s docstring promises "pre-bucket
-    the persisted store on the band key and that join moves no corpus data";
+    the persisted store on band_key and its corpus side never shuffles";
     this is that pre-bucketing, made concrete: `bucketBy(n_buckets, band_idx,
     band_key)` + `sortBy` writes each bucket pre-hashed and pre-sorted, so a
     join keyed on (band_idx, band_key) reads the store's buckets in place
@@ -2433,10 +2431,19 @@ def minhash_dedup_incremental(
     Broder position-agreement estimate under verify="signature" (std ≈
     sqrt(J(1-J)/n_hashes)), exact under verify="exact".
 
-    Scale shape: the only corpus-sized work is one equi-join on
-    (band_idx, band_key) — pre-bucket the persisted store on band_key and
-    that join is shuffle-free on the corpus side. Skew guard: the
-    `max_bucket` cap applies to the batch side always; pass
+    Scale shape: one pass bands corpus ∪ batch, every band row carrying
+    its doc's (id, verify value, side), and ONE equi-join on (band_idx,
+    band_key) both finds and verifies the pairs: the a-side is every band
+    row, the b-side the batch's, kept where vs='corpus' or id_a < id_b. No
+    id → sig re-join follows. That join is the only corpus-sized work;
+    pre-bucket the persisted store on band_key and its corpus side never
+    shuffles (a small batch makes it a broadcast join anyway). The carried
+    value is n_hashes longs per band row; under verify="exact" each doc's
+    shingle array travels once per band instead, the price of exact mode,
+    which the persisted (id, sig) store cannot use in any case.
+
+    Skew guard: a bucket holding more than `max_bucket` batch docs is
+    dropped from the b-side, so it pairs with nothing; pass
     `cap_corpus=False` when the store was already capped at build time —
     the default True recomputes a corpus-wide bucket-count window EVERY
     call, which is a corpus-sized shuffle a per-batch ingest loop must not
@@ -2444,9 +2451,11 @@ def minhash_dedup_incremental(
     survivors, so buckets stay bounded by construction).
 
     Cache ownership: pass `new_sigs` (a `minhash_signatures` output for
-    `new_df` that YOU persist/unpersist) when calling in a loop — when it is
-    None, an internal `.cache()` is created whose blocks live until the
-    RDD is GC'd, which leaks executor memory across a long batch loop.
+    `new_df` that YOU persist/unpersist) when calling in a loop. When it is
+    None the operator persists the batch's signatures itself under
+    `scoped_persist("minhash_dedup_incremental_sigs")`: the entry lives in
+    the session CacheManager until the next such call releases it, so at
+    most one call's signatures stay cached.
     """
     if verify not in ("exact", "signature"):
         raise ValueError(f"unknown verify {verify!r} (exact/signature)")
@@ -2457,38 +2466,38 @@ def minhash_dedup_incremental(
                 "persisted (id, sig) store supports verify='signature' only"
             )
     if new_sigs is None:
-        new_sigs = minhash_signatures(new_df, text_col, id_col, n_hashes, shingle_n).cache()
+        from lantern_extras_spark.operators._cachescope import scoped_persist
 
-    def capped_bands(sigs: DataFrame, cap: bool = True) -> DataFrame:
-        b = band_keys(sigs, bands, id_col, n_hashes)
-        if not cap:
-            return b
-        return b.withColumn(
-            "bucket_n", F.count("*").over(Window.partitionBy("band_idx", "band_key"))
-        ).where(F.col("bucket_n") <= max_bucket).drop("bucket_n")
-
-    nb = capped_bands(new_sigs)
-    cb = capped_bands(corpus_sigs, cap_corpus)
-    cross = (
-        cb.select("band_idx", "band_key", F.col(id_col).alias("id_a"))
-        .join(nb.select("band_idx", "band_key", F.col(id_col).alias("id_b")),
-              ["band_idx", "band_key"])
-        .select("id_a", "id_b")
-        .distinct()
-        .withColumn("vs", F.lit("corpus"))
-    )
-    batch = (
-        lsh_candidate_pairs(new_sigs, bands, id_col, max_bucket, n_hashes=n_hashes)
-        .withColumn("vs", F.lit("batch"))
-    )
-    cands = cross.unionByName(batch)
-
+        (new_sigs,) = scoped_persist(
+            "minhash_dedup_incremental_sigs",
+            minhash_signatures(new_df, text_col, id_col, n_hashes, shingle_n),
+        )
     ver_col = "shingles" if verify == "exact" else "sig"
-    a_side = corpus_sigs.select(F.col(id_col).alias("id_a"), F.col(ver_col).alias("v_a")).unionByName(
-        new_sigs.select(F.col(id_col).alias("id_a"), F.col(ver_col).alias("v_a"))
-    )
-    b_side = new_sigs.select(F.col(id_col).alias("id_b"), F.col(ver_col).alias("v_b"))
-    joined = cands.join(a_side, "id_a").join(b_side, "id_b")
+
+    def tagged(sigs: DataFrame, vs: str) -> DataFrame:
+        # the (id, verify value, side) struct rides through the banding as
+        # the row id, so every band row carries what the verify needs
+        row = F.struct(F.col(id_col).alias("id"), F.col(ver_col).alias("v"),
+                       F.lit(vs).alias("vs"))
+        return sigs.select(row.alias("__row"), "sig")
+
+    def capped(b: DataFrame, *by: str) -> DataFrame:
+        w = Window.partitionBy("band_idx", "band_key", *by)
+        return b.withColumn("bucket_n", F.count("*").over(w)).where(
+            F.col("bucket_n") <= max_bucket).drop("bucket_n")
+
+    rows = band_keys(
+        tagged(corpus_sigs, "corpus").unionByName(tagged(new_sigs, "batch")),
+        bands, "__row", n_hashes,
+    ).select("band_idx", "band_key", "__row.*")
+    a_side = capped(rows, "vs") if cap_corpus else rows
+    b_side = capped(rows.where(F.col("vs") == "batch"))
+    joined = a_side.select(
+        "band_idx", "band_key", F.col("id").alias("id_a"), F.col("v").alias("v_a"), "vs"
+    ).join(
+        b_side.select("band_idx", "band_key", F.col("id").alias("id_b"), F.col("v").alias("v_b")),
+        ["band_idx", "band_key"],
+    ).where((F.col("vs") == "corpus") | (F.col("id_a") < F.col("id_b")))
     if verify == "exact":
         est = jaccard(F.col("v_a"), F.col("v_b"))
     else:
@@ -2501,6 +2510,7 @@ def minhash_dedup_incremental(
         joined.withColumn("jaccard", est)
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard", "vs")
+        .distinct()
     )
 
 

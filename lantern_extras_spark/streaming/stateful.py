@@ -45,8 +45,8 @@ def _read_store_or_none(sess, store_dir: str, columns: list[str] | None = None):
     except AnalysisException as e:
         cond = ""
         try:
-            cond = e.getErrorClass() or ""
-        except Exception:  # noqa: BLE001 — older pyspark without error classes
+            cond = e.getCondition() or ""
+        except Exception:  # noqa: BLE001 — older pyspark without error conditions
             pass
         msg = f"{cond} {e}"
         if "PATH_NOT_FOUND" in msg or "UNABLE_TO_INFER_SCHEMA" in msg:
@@ -276,46 +276,52 @@ def ingest_dedup_batch(
     the idempotency contract is directly testable: re-running the SAME
     (batch, epoch_id) overwrites its own `epoch=N` partition directories in
     both sinks instead of appending duplicates, which is what upgrades
-    foreachBatch's at-least-once to effectively exactly-once."""
-    if bdf.isEmpty():
-        return
+    foreachBatch's at-least-once to effectively exactly-once.
+
+    Every batch, the first included, takes one path: its signatures are
+    persisted once, an absent store is an empty (id, sig) frame, and the
+    dropped ids are persisted once and broadcast into both sinks' anti
+    joins. Both frames are released even when a write fails, so the retry
+    foreachBatch makes starts with nothing cached."""
     from lantern_extras_spark.operators.dedup import (
-        minhash_dedup,
         minhash_dedup_incremental,
         minhash_signatures,
     )
 
     sess = bdf.sparkSession
     epoch = int(epoch_id)
-    sigs = minhash_signatures(bdf, text_col, id_col, n_hashes).select(id_col, "sig").cache()
-    # read through the session's Hadoop FS (works on HDFS/S3/DBFS/local
-    # alike); ONLY a genuinely-missing store (first batch) routes to the
-    # batch-only branch — transient read failures re-raise and retry
-    store = _read_store_or_none(sess, store_dir, [id_col, "sig"])
-    if store is not None:
-        # a RETRY of this epoch already wrote its own epoch=N store rows —
-        # excluding them (partition-pruned) keeps the retry from matching the
-        # batch against itself and dropping every survivor
-        if "epoch" in store.columns:
-            store = store.where(F.col("epoch") != epoch)
-        store = store.select(id_col, "sig")
-    if store is not None:
+    sigs = minhash_signatures(bdf, text_col, id_col, n_hashes).select(id_col, "sig").persist()
+    dropped = None
+    try:
+        if sigs.isEmpty():  # fills the whole cache, then reads one row of it
+            return
+        # read through the session's Hadoop FS (works on HDFS/S3/DBFS/local
+        # alike); ONLY a genuinely-missing store (first batch) becomes the
+        # empty store — transient read failures re-raise and retry
+        store = _read_store_or_none(sess, store_dir, [id_col, "sig"])
+        if store is None:
+            store = sess.createDataFrame([], sigs.schema)
+        else:
+            # a RETRY of this epoch already wrote its own epoch=N store rows —
+            # excluding them (partition-pruned) keeps the retry from matching
+            # the batch against itself and dropping every survivor
+            if "epoch" in store.columns:
+                store = store.where(F.col("epoch") != epoch)
+            store = store.select(id_col, "sig")
         pairs = minhash_dedup_incremental(
             bdf, store, text_col, id_col, n_hashes, bands=bands,
             threshold=threshold, new_sigs=sigs, cap_corpus=False,
         )
-    else:
-        pairs = minhash_dedup(
-            bdf, text_col, id_col, n_hashes, bands=bands,
-            threshold=threshold, verify="signature",
-        )
-    dropped = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    survivors = bdf.join(dropped, id_col, "left_anti")
-    survivors.write.mode("overwrite").parquet(f"{output_dir}/epoch={epoch}")
-    sigs.join(dropped, id_col, "left_anti").write.mode("overwrite").parquet(
-        f"{store_dir}/epoch={epoch}"
-    )
-    sigs.unpersist()
+        # persist, not localCheckpoint: a lost executor recomputes from lineage
+        dropped = pairs.select(F.col("id_b").alias(id_col)).distinct().persist()
+        bdf.join(F.broadcast(dropped), id_col, "left_anti").write.mode(
+            "overwrite").parquet(f"{output_dir}/epoch={epoch}")
+        sigs.join(F.broadcast(dropped), id_col, "left_anti").write.mode(
+            "overwrite").parquet(f"{store_dir}/epoch={epoch}")
+    finally:
+        sigs.unpersist()
+        if dropped is not None:
+            dropped.unpersist()
 
 
 def start_ingest_dedup_stream(
@@ -348,10 +354,13 @@ def start_ingest_dedup_stream(
     the extra `epoch` int partition column on `spark.read.parquet(dir)`.
 
     Scale posture is the batch operator's (minhash_dedup_incremental):
-    corpus text is never re-read — each batch's work is its own signing plus
-    a band-key equi-join against the store (`cap_corpus=False`: the store
-    holds only keep-first survivors, so no per-batch corpus-wide bucket
-    recount is paid). Store presence is detected by reading it through
+    corpus text is never re-read — each batch signs its docs once, and one
+    band-key equi-join against the store (plus the batch itself) both finds
+    and verifies its near-dup pairs (`cap_corpus=False`: the store holds
+    only keep-first survivors, so no per-batch corpus-wide bucket recount
+    is paid). The first batch takes the same path against an empty store,
+    and the dropped ids are materialised once for both sinks (see
+    `ingest_dedup_batch`). Store presence is detected by reading it through
     Spark's own Hadoop filesystem, so HDFS/S3/DBFS stores are found — not
     just driver-local paths.
     """

@@ -669,6 +669,129 @@ def test_minhash_incremental_store_roundtrip(spark, tmp_path):
     assert [(r["id_a"], r["id_b"], r["jaccard"], r["vs"]) for r in got] == [(1, 10, 1.0, "corpus")]
 
 
+
+def _incremental_reference(corpus, batch, bands, n_hashes, max_bucket,
+                           threshold, cap_corpus):
+    """Pure-Python `minhash_dedup_incremental` over collected {id: sig}
+    maps: band keys, per-side bucket caps, Broder estimate."""
+    rows = n_hashes // bands
+
+    def buckets(sigs, cap):
+        out = {}
+        for i, sig in sigs.items():
+            if sig is None:  # empty document: no band rows
+                continue
+            for b in range(bands):
+                key = (b, "_".join(str(v) for v in sig[b * rows:(b + 1) * rows]))
+                out.setdefault(key, set()).add(i)
+        return {k: v for k, v in out.items() if not cap or len(v) <= max_bucket}
+
+    cb, nb = buckets(corpus, cap_corpus), buckets(batch, True)
+    cands = set()
+    for key, ids in nb.items():
+        cands |= {(a, b, "corpus") for a in cb.get(key, ()) for b in ids}
+        cands |= {(a, b, "batch") for a in ids for b in ids if a < b}
+    out = set()
+    for a, b, vs in cands:
+        sig_a = (corpus if vs == "corpus" else batch)[a]
+        est = sum(x == y for x, y in zip(sig_a, batch[b])) / n_hashes
+        if est >= threshold:
+            out.add((a, b, est, vs))
+    return out
+
+
+@pytest.mark.parametrize("cap_corpus", [True, False])
+def test_minhash_incremental_matches_python_reference(spark, cap_corpus):
+    """Band join, per-side bucket caps (one batch and one corpus bucket over
+    `max_bucket`), corpus/batch labels and the Broder estimate all agree
+    with a pure-Python reference; no pair is emitted twice."""
+    import random
+
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(400)]
+
+    def text():
+        return " ".join(rng.choice(vocab) for _ in range(24))
+
+    def edit(t):  # one word replaced: a near duplicate
+        w = t.split()
+        w[rng.randrange(len(w))] = "edited"
+        return " ".join(w)
+
+    corpus = [(i, text()) for i in range(24)]
+    crowd = text()  # 4 corpus copies: a corpus bucket over the cap
+    corpus += [(30 + i, crowd) for i in range(4)] + [(40, "")]
+    pile = text()  # 4 batch copies: a batch bucket over the cap
+    fresh = text()
+    batch = (
+        [(100 + i, corpus[i][1]) for i in range(4)]            # corpus copies
+        + [(110 + i, edit(corpus[4 + i][1])) for i in range(4)]  # corpus near dups
+        + [(120, fresh), (121, fresh), (122, edit(fresh))]     # in-batch dups
+        + [(130 + i, pile) for i in range(4)]
+        + [(140, crowd), (141, ""), (142, "")]
+        + [(150 + i, text()) for i in range(6)]
+    )
+    schema = "doc_id long, text string"
+    corpus_df = spark.createDataFrame(corpus, schema)
+    batch_df = spark.createDataFrame(batch, schema)
+    store = D.minhash_signatures(corpus_df).select("doc_id", "sig")
+
+    got = [
+        (r["id_a"], r["id_b"], r["jaccard"], r["vs"])
+        for r in D.minhash_dedup_incremental(
+            batch_df, store, threshold=0.5, max_bucket=3, cap_corpus=cap_corpus
+        ).collect()
+    ]
+    sigs = {
+        r["doc_id"]: r["sig"]
+        for r in D.minhash_signatures(corpus_df.unionByName(batch_df)).collect()
+    }
+    want = _incremental_reference(
+        {i: sigs[i] for i, _ in corpus}, {i: sigs[i] for i, _ in batch},
+        bands=8, n_hashes=32, max_bucket=3, threshold=0.5, cap_corpus=cap_corpus,
+    )
+    assert len(got) == len(set(got))
+    assert set(got) == want
+    labels = {(a, b, vs) for a, b, _, vs in want}
+    assert (0, 100, "corpus") in labels and (120, 121, "batch") in labels
+    assert not any(b in (130, 131, 132, 133) for _, b, _ in labels)  # batch cap
+    assert ((30, 140, "corpus") in labels) == (not cap_corpus)      # corpus cap
+
+
+def test_band_keys_skip_null_signatures(spark):
+    """An empty document has a null signature: it gets no band rows, so
+    empty documents never share a '' bucket."""
+    sigs = spark.createDataFrame(
+        [(1, list(range(32))), (2, None)], "doc_id long, sig array<bigint>"
+    )
+    rows = D.band_keys(sigs, 8).collect()
+    assert {r["doc_id"] for r in rows} == {1}
+    assert len(rows) == 8 and "" not in {r["band_key"] for r in rows}
+
+
+def test_minhash_incremental_internal_cache_is_scoped(spark):
+    """Without `new_sigs` the operator's own signature cache is released by
+    its next call: one live entry under the key, never a growing pile."""
+    from lantern_extras_spark.operators import _cachescope as S
+
+    key = "minhash_dedup_incremental_sigs"
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon zeta"),
+         (10, "alpha beta gamma delta epsilon zeta")],
+        "doc_id long, text string",
+    )
+    store = D.minhash_signatures(docs.where("doc_id < 10")).select("doc_id", "sig")
+    try:
+        D.minhash_dedup_incremental(docs.where("doc_id >= 10"), store).collect()
+        (first,) = S._LIVE[key][1]
+        D.minhash_dedup_incremental(docs.where("doc_id > 10"), store).collect()
+        assert not first.storageLevel.useMemory and not first.storageLevel.useDisk
+        (second,) = S._LIVE[key][1]
+        assert second.storageLevel.useMemory
+    finally:
+        for df in S._LIVE.pop(key, (None, []))[1]:
+            df.unpersist()
+
 def test_dedup_spans_excises_only_the_copied_span(spark):
     shared = "one two three four five six seven eight"
     docs = spark.createDataFrame(
