@@ -1325,10 +1325,10 @@ def q_pq_adc_topk(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_knn_chunked(spark: SparkSession, sf: str) -> DataFrame:
-    """Exact large-vs-large kNN (operators/knn.py strategy='chunked'): the
-    query side is hash-split into bounded blocks (chunk_size=8 forces ~4
-    blocks here), each broadcast through the partial kernel, block frames
-    unioned, one finishing window. Removes the 100k driver ceiling that
+    """Exact large-vs-large kNN (operators/knn.py default path above
+    `chunk_size`): the query side is hash-split into bounded blocks
+    (chunk_size=8 forces ~4 blocks here), each broadcast through the partial
+    kernel, block frames unioned, one finishing window. Removes the 100k driver ceiling that
     previously routed exact ground truth onto the ANN path (ref
     lantern_cli/src/index_autotune/mod.rs:196-203 semantics at N3 scale).
     Must hash-match the plain crossjoin/SQL answer exactly."""
@@ -1337,10 +1337,7 @@ def q_knn_chunked(spark: SparkSession, sf: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     data = emb.where(F.col("vec_id") >= 30)
-    out = K.knn_join(
-        data, q, k=10, metric="cos", strategy="chunked", dist_scale=6,
-        chunk_size=8,
-    )
+    out = K.knn_join(data, q, k=10, metric="cos", dist_scale=6, chunk_size=8)
     return out.select(
         "query_id", "vec_id", F.col("distance").alias("cos_distance"),
         F.col("rank").cast("bigint").alias("rnk"),
@@ -2323,7 +2320,7 @@ def q_hard_negatives(spark: SparkSession, sf: str) -> DataFrame:
 
 def q_hard_negatives_chunked(spark: SparkSession, sf: str) -> DataFrame:
     """Hard-negative mining at training-set scale (knn.hard_negatives
-    strategy='chunked', r10): the same bounded-block plan as knn_chunked
+    default path above `chunk_size`): the same bounded-block plan as knn_chunked
     with query labels traveling in each block's broadcast — the masked
     per-task top-k must reproduce the declarative crossjoin answer exactly
     (chunk_size=8 forces ~4 blocks over 30 queries)."""
@@ -2334,10 +2331,7 @@ def q_hard_negatives_chunked(spark: SparkSession, sf: str) -> DataFrame:
         F.col("label").alias("query_label"),
     )
     data = emb.where(F.col("vec_id") >= 30)
-    out = K.hard_negatives(
-        data, q, k=10, metric="cos", strategy="chunked", dist_scale=6,
-        chunk_size=8,
-    )
+    out = K.hard_negatives(data, q, k=10, metric="cos", dist_scale=6, chunk_size=8)
     return out.select(
         "query_id",
         "vec_id",

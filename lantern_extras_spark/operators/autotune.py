@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lantern_extras_spark.operators import pq as PQ
-from lantern_extras_spark.operators.knn import collect_neighbors, ground_truth, recall
+from lantern_extras_spark.operators.knn import answer_key, collect_neighbors, knn_join, recall
 
 # Default PQ variant grid — mirrors the reference's fixed 6-variant grid idea
 # (index_autotune/mod.rs:329-360), coarse→fine.
@@ -294,15 +294,7 @@ def autotune_pq(
         if cached:
             return select_best(cached, target_recall), cached
 
-    truth = ground_truth(
-        df, n_queries=n_queries, k=k, metric="l2sq", id_col=id_col, vec_col=vec_col, seed=seed
-    ).collect()
-    spark = df.sparkSession
-    truth_df = spark.createDataFrame(
-        [(r["id"], [int(x) for x in r["neighbors"]]) for r in truth],
-        "id long, neighbors array<long>",
-    )
-    queries = [(r["id"], list(map(float, r["v"]))) for r in truth]
+    truth_df, queries = answer_key(df, n_queries, k, id_col=id_col, vec_col=vec_col, seed=seed)
     # one count + one dim probe for the WHOLE sweep, not one per variant
     total_rows = df.count()
     dim = len(queries[0][1])
@@ -374,15 +366,7 @@ def autotune_ivf(
         if cached:
             return select_best(cached, target_recall), cached
 
-    truth = ground_truth(
-        df, n_queries=n_queries, k=k, metric="l2sq", id_col=id_col, vec_col=vec_col, seed=seed
-    ).collect()
-    spark = df.sparkSession
-    truth_df = spark.createDataFrame(
-        [(r["id"], [int(x) for x in r["neighbors"]]) for r in truth],
-        "id long, neighbors array<long>",
-    )
-    queries = [(r["id"], list(map(float, r["v"]))) for r in truth]
+    truth_df, queries = answer_key(df, n_queries, k, id_col=id_col, vec_col=vec_col, seed=seed)
     total_rows = df.count()  # one count for the whole sweep
 
     out: list[VariantResult] = []
@@ -462,15 +446,7 @@ def autotune_ivf_pq(
         if cached:
             return select_best(cached, target_recall), cached
 
-    truth = ground_truth(
-        df, n_queries=n_queries, k=k, metric="l2sq", id_col=id_col, vec_col=vec_col, seed=seed
-    ).collect()
-    spark = df.sparkSession
-    truth_df = spark.createDataFrame(
-        [(r["id"], [int(x) for x in r["neighbors"]]) for r in truth],
-        "id long, neighbors array<long>",
-    )
-    queries = [(r["id"], list(map(float, r["v"]))) for r in truth]
+    truth_df, queries = answer_key(df, n_queries, k, id_col=id_col, vec_col=vec_col, seed=seed)
     total_rows = df.count()  # one count for the whole sweep
 
     out: list[IvfPqVariant] = []
@@ -551,15 +527,7 @@ def autotune_hnsw(
         if cached:
             return select_best(cached, target_recall), cached
 
-    truth = ground_truth(
-        df, n_queries=n_queries, k=k, metric="l2sq", id_col=id_col, vec_col=vec_col, seed=seed
-    ).collect()
-    spark = df.sparkSession
-    truth_df = spark.createDataFrame(
-        [(r["id"], [int(x) for x in r["neighbors"]]) for r in truth],
-        "id long, neighbors array<long>",
-    )
-    queries = [(r["id"], list(map(float, r["v"]))) for r in truth]
+    truth_df, queries = answer_key(df, n_queries, k, id_col=id_col, vec_col=vec_col, seed=seed)
 
     out: list[HnswVariant] = []
     for m, efc, ef in variants:
@@ -620,18 +588,8 @@ def autotune_bq(
         if cached:
             return select_best(cached, target_recall), cached
 
-    truth = ground_truth(
-        df, n_queries=n_queries, k=k, metric="l2sq", id_col=id_col, vec_col=vec_col, seed=seed
-    ).collect()
-    spark = df.sparkSession
-    truth_df = spark.createDataFrame(
-        [(r["id"], [int(x) for x in r["neighbors"]]) for r in truth],
-        "id long, neighbors array<long>",
-    )
-    queries = spark.createDataFrame(
-        [(int(r["id"]), [float(x) for x in r["v"]]) for r in truth],
-        "query_id long, query_vec array<double>",
-    )
+    truth_df, qlist = answer_key(df, n_queries, k, id_col=id_col, vec_col=vec_col, seed=seed)
+    queries = df.sparkSession.createDataFrame(qlist, "query_id long, query_vec array<double>")
 
     t0 = time.monotonic()
     mids = BQ.bq_train(df, vec_col)
@@ -684,19 +642,9 @@ def compare_compressed(
     from lantern_extras_spark.operators import bq as BQ
     from lantern_extras_spark.operators import sq as SQ8
 
-    truth = ground_truth(
-        df, n_queries=n_queries, k=k, metric="l2sq", id_col=id_col, vec_col=vec_col, seed=seed
-    ).collect()
+    truth_df, queries = answer_key(df, n_queries, k, id_col=id_col, vec_col=vec_col, seed=seed)
     spark = df.sparkSession
-    truth_df = spark.createDataFrame(
-        [(r["id"], [int(x) for x in r["neighbors"]]) for r in truth],
-        "id long, neighbors array<long>",
-    )
-    queries_df = spark.createDataFrame(
-        [(int(r["id"]), [float(x) for x in r["v"]]) for r in truth],
-        "query_id long, query_vec array<double>",
-    )
-    queries = [(int(r["id"]), [float(x) for x in r["v"]]) for r in truth]
+    queries_df = spark.createDataFrame(queries, "query_id long, query_vec array<double>")
     dim = len(queries[0][1])
     total_rows = df.count()
     rows = []
@@ -711,8 +659,6 @@ def compare_compressed(
         return rec, round(lat, 4)
 
     # exact float baseline
-    from lantern_extras_spark.operators.knn import knn_join
-
     rec, lat = _measure(
         knn_join(df.select(F.col(id_col), F.col(vec_col).alias("embedding")),
                  queries_df, k=k, metric="l2sq")
@@ -727,7 +673,6 @@ def compare_compressed(
     sq_build = round(time.monotonic() - t0, 4)
     rec, lat = _measure(
         SQ8.sq8_knn_join(sq_coded, queries_df, mins, maxs, k=k, id_col=id_col)
-        .withColumnRenamed("rank", "rank")
     )
     sq_coded.unpersist()
     rows.append(("sq8", "dequantized scan", rec, lat, sq_build, dim))

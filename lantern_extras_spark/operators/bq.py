@@ -222,28 +222,19 @@ def bq_recall_vs_exact(
 ) -> float:
     """Recall of BQ two-stage top-k against exact float kNN over sampled
     queries — the honesty dial every approximate path here carries."""
-    from lantern_extras_spark.operators.knn import collect_neighbors, ground_truth, recall
+    from lantern_extras_spark.operators.knn import answer_key, collect_neighbors, recall
 
     mids = bq_train(df, vec_col)
     coded = bq_encode(df, mids, vec_col=vec_col, out_col="bq").cache()
     coded.count()
-    truth = ground_truth(df, n_queries=n_queries, k=k, metric="l2sq",
-                         id_col=id_col, vec_col=vec_col, seed=seed).collect()
-    spark = df.sparkSession
-    queries = spark.createDataFrame(
-        [(int(r["id"]), [float(x) for x in r["v"]]) for r in truth],
-        "query_id long, query_vec array<double>",
-    )
+    truth, qlist = answer_key(df, n_queries, k, id_col=id_col, vec_col=vec_col, seed=seed)
+    queries = df.sparkSession.createDataFrame(qlist, "query_id long, query_vec array<double>")
     res = collect_neighbors(
         bq_knn_join(coded, queries, mids, k=k, oversample=oversample,
                     id_col=id_col, vec_col=vec_col)
         .withColumnRenamed("rnk", "rank"),
         qid_col="query_id", id_col=id_col,
     )
-    truth_df = spark.createDataFrame(
-        [(r["id"], [int(x) for x in r["neighbors"]]) for r in truth],
-        "id long, neighbors array<long>",
-    )
-    rec = recall(truth_df, res, k)
+    rec = recall(truth, res, k)
     coded.unpersist()
     return rec

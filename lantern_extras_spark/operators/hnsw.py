@@ -564,25 +564,18 @@ def hnsw_recall_vs_exact(
 ) -> float:
     """Recall of sharded-HNSW top-k vs exact kNN (N4-style eval, one batched
     search job for all queries)."""
-    from lantern_extras_spark.operators.knn import collect_neighbors, ground_truth, recall
+    from lantern_extras_spark.operators.knn import answer_key, collect_neighbors, recall
 
     shards = build_hnsw_shards(
         df, vec_col=vec_col, id_col=id_col, n_shards=n_shards, m=m,
         ef_construction=ef_construction, metric="l2sq", seed=seed,
     ).cache()
     shards.count()
-    truth = ground_truth(df, n_queries=n_queries, k=k, metric="l2sq",
-                         id_col=id_col, vec_col=vec_col, seed=seed).collect()
-    spark = df.sparkSession
-    queries = [(int(r["id"]), list(map(float, r["v"]))) for r in truth]
+    truth, queries = answer_key(df, n_queries, k, id_col=id_col, vec_col=vec_col, seed=seed)
     res_df = collect_neighbors(
         hnsw_topk_batch(shards, queries, k=k, ef=ef, id_col=id_col),
         qid_col="query_id", id_col=id_col,
     )
-    truth_df = spark.createDataFrame(
-        [(r["id"], [int(x) for x in r["neighbors"]]) for r in truth],
-        "id long, neighbors array<long>",
-    )
-    rec = recall(truth_df, res_df, k)
+    rec = recall(truth, res_df, k)
     shards.unpersist()
     return rec

@@ -370,8 +370,9 @@ def ivf_knn_join(
 ) -> DataFrame:
     """Cross-corpus approximate kNN join — BOTH sides large and distributed.
 
-    `knn_join` collects/broadcasts the query side (capped at 100k rows); a
-    training pipeline's embedding-level decontamination is corpus-vs-corpus
+    `knn_join` is exact but broadcasts the query side, one block of at most
+    `chunk_size` queries per scan of the corpus, so a large query side costs
+    ceil(q / chunk_size) full corpus scans; a training pipeline's embedding-level decontamination is corpus-vs-corpus
     (every eval-set vector against every training vector — the vector analog
     of `decontaminate`; the reference's single-query shape is
     index_autotune/mod.rs:196-203). The scale shape here:
@@ -609,24 +610,18 @@ def ivf_recall_vs_exact(
 ) -> float:
     """Recall of IVF top-k vs exact kNN over sampled queries (N4-style eval).
     All queries run through one batched probe job (`ivf_topk_batch`)."""
-    from lantern_extras_spark.operators.knn import collect_neighbors, ground_truth, recall
+    from lantern_extras_spark.operators.knn import answer_key, collect_neighbors, recall
 
     indexed, centroids = build_ivf(df, vec_col=vec_col, nlist=nlist, seed=seed)
     indexed = indexed.cache()
     indexed.count()
-    truth = ground_truth(df, n_queries=n_queries, k=k, metric="l2sq",
-                         id_col=id_col, vec_col=vec_col, seed=seed).collect()
-    spark = df.sparkSession
-    queries = [(int(r["id"]), list(map(float, r["v"]))) for r in truth]
+    truth, queries = answer_key(df, n_queries, k, id_col=id_col, vec_col=vec_col, seed=seed)
     res_df = collect_neighbors(
         ivf_topk_batch(indexed, centroids, queries, k=k, nprobe=nprobe,
                        vec_col=vec_col, id_col=id_col),
         qid_col="query_id", id_col=id_col,
     )
-    truth_df = spark.createDataFrame(
-        [(r["id"], [int(x) for x in r["neighbors"]]) for r in truth], "id long, neighbors array<long>"
-    )
-    rec = recall(truth_df, res_df, k)
+    rec = recall(truth, res_df, k)
     indexed.unpersist()
     return rec
 

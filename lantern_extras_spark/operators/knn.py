@@ -9,12 +9,15 @@ Reference surface:
 Spark-first design, sized for 100 TB:
 - The query side is always the small side → **broadcast** it; the data side streams
   through a narrow map stage. There is no shuffle of the data table at all.
-- Strategy "partial": per Arrow batch, a numpy/BLAS kernel computes the distance
-  matrix and keeps only the k best rows per query, so the global top-k step sees
-  ≤ (#batches × q × k) rows instead of n×q. The final exact top-k is a window over
-  that reduced set. Total shuffled bytes are O(q·k·#batches), independent of n·d.
+- Strategy "partial" (default): per Arrow batch, a numpy/BLAS kernel computes the
+  distance matrix and keeps only the k best rows per query, so the global top-k step
+  sees ≤ (#tasks × q × k) rows instead of n×q. The final exact top-k is a window over
+  that reduced set. Total shuffled bytes are O(q·k·#tasks), independent of n·d. The
+  query count picks the blocks: up to `chunk_size` queries broadcast as one block,
+  more are hash-split into ceil(q / chunk_size) blocks, one data scan each.
+  `hard_negatives` runs the same kernel and block loop with a same-label mask.
 - Strategy "crossjoin": declarative broadcast-nested-loop + window; Catalyst plan,
-  good for small data sides and for the correctness oracle, O(n·q) through the window.
+  the reference the oracle and tests compare against, O(n·q) through the window.
 
 Ties are broken deterministically by (distance, id) so results are reproducible and
 hash-comparable across engines.
@@ -40,9 +43,9 @@ from pyspark.sql.window import Window
 
 from lantern_extras_spark.functions.portable import pround
 
-# fail-loud ceiling for query frames that the partial strategy materializes on
-# the driver (VERDICT r6 item 2: an unguarded .collect() turns a mistakenly
-# huge query side into a driver OOM instead of an actionable error)
+# fail-loud ceiling for one query block materialized on the driver (an
+# unguarded .collect() turns a mistakenly huge query side into a driver OOM
+# instead of an actionable error); chunk_size may be at most half of it
 MAX_COLLECTED_QUERIES = 100_000
 
 # per-task distance-matrix budget for the partial kernel (doubles): query
@@ -125,82 +128,67 @@ def knn_join(
     """Batch exact kNN: for every query row, the k nearest data rows.
 
     Returns (qid_col, id_col, distance, rank). `strategy`:
-    - "partial" (default, the 100 TB path for BOUNDED query sets): broadcast
-      queries into an Arrow-batched kernel that emits per-batch top-k, then
-      one window over the reduced set. Fail-louds above MAX_COLLECTED_QUERIES.
-    - "chunked": EXACT large-vs-large — the query side is hash-split into
-      ceil(q / chunk_size) disjoint blocks; each block is collected within
-      the driver cap, broadcast, and run through the partial kernel; the
-      per-block frames are unioned and one finishing window ranks per query
-      (blocks partition the queries, so no cross-block merge is needed).
-      The driver never holds more than one block (<= chunk_size rows) at a
-      time, removing the partial strategy's 100k ceiling while keeping the
-      answer exact. Costs: the data side is scanned once per block (exact
-      kNN's O(n*q) distance work is irreducible — persist `data` to
-      amortize IO when it fits), and executors hold ~q*d*8 bytes of query
-      broadcasts across the union's stages. For query sides where that
-      footprint is too large, `ivf.ivf_knn_join` is the (approximate)
-      both-sides-distributed alternative.
-    - "crossjoin": pure-DataFrame broadcast join + window (oracle-friendly).
-    - "auto": count the query side once and route — "partial" when it fits
-      the driver cap (one scan of data), "chunked" above it (r10; the
-      pipeline-friendly default for callers whose query volume varies).
+    - "partial" (default, the 100 TB path): the query side is broadcast into
+      an Arrow-batched kernel that emits per-task top-k, then one window
+      ranks the reduced set. The query count picks the blocks: up to
+      `chunk_size` queries run as ONE block (one scan of `data`); above it
+      the query side is hash-split into ceil(q / chunk_size) disjoint
+      blocks, each collected within the driver cap, broadcast and run
+      through the same kernel, and the block frames are unioned before the
+      window (blocks partition the queries, so no cross-block merge is
+      needed). The driver never holds more than one block. Each extra block
+      costs one more scan of `data` (exact kNN's O(n*q) distance work is
+      irreducible — persist `data` to amortize IO when it fits), and
+      executors hold ~q*d*8 bytes of query broadcasts across the union's
+      stages; where that is too large, `ivf.ivf_knn_join` is the
+      (approximate) both-sides-distributed alternative. A query side of
+      50,001–100,000 rows, one block before the query count picked the
+      blocks, now runs as two at the default `chunk_size`.
+    - "crossjoin": pure-DataFrame broadcast join + window — the declarative
+      reference the oracle and the tests compare the kernel against.
 
     `dist_scale` rounds the distance *before* ranking (with (distance, id) tie-break)
     so rankings are reproducible across engines for correctness harnesses.
     """
     if metric not in METRICS:
         raise ValueError(f"unknown metric {metric!r}; expected one of {METRICS}")
-    if strategy == "auto":
-        strategy = (
-            "partial"
-            if queries.limit(MAX_COLLECTED_QUERIES + 1).count() <= MAX_COLLECTED_QUERIES
-            else "chunked"
-        )
-    if strategy == "chunked":
-        return _knn_join_chunked(
-            data, queries, k, metric, id_col, vec_col, qid_col, qvec_col,
-            dist_scale, chunk_size,
-        )
     if strategy == "crossjoin":
-        d = distance_col(metric, F.col(vec_col), F.col(qvec_col))
-        if dist_scale is not None:
-            d = pround(d, dist_scale)
         joined = data.select(id_col, vec_col).crossJoin(
             F.broadcast(queries.select(qid_col, qvec_col))
         )
-        w = Window.partitionBy(qid_col).orderBy(F.col("distance").asc(), F.col(id_col).asc())
-        return (
-            joined.withColumn("distance", d)
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(qid_col, id_col, "distance", "rank")
+        return _rank(
+            joined.withColumn("distance", _dist(metric, vec_col, qvec_col, dist_scale)),
+            k, qid_col, id_col,
         )
-
-    if strategy != "partial":
-        raise ValueError(f"unknown strategy {strategy!r}")
-
-    # query side is small by contract (mirrors the reference's sampled query
-    # sets, index_autotune/mod.rs:202) — but enforce it: limit(N+1) bounds
-    # what the driver materializes, so an accidental 10M-row query frame gets
-    # a clear error instead of a driver OOM
-    qrows = queries.select(qid_col, qvec_col).limit(MAX_COLLECTED_QUERIES + 1).collect()
-    if len(qrows) > MAX_COLLECTED_QUERIES:
-        raise ValueError(
-            f"strategy='partial' collects the query side to the driver and it "
-            f"exceeds {MAX_COLLECTED_QUERIES} rows; for exact large-vs-large "
-            "use strategy='chunked' (bounded query blocks, never more than "
-            "one on the driver), or ivf.ivf_knn_join for the approximate "
-            "both-sides-distributed path"
-        )
-    partial = _partial_frame(
-        data, qrows, k, metric, id_col, vec_col, qid_col, dist_scale
+    _check_strategy(strategy)
+    return _knn_join_chunked(
+        data, queries, k, metric, id_col, vec_col, qid_col, qvec_col,
+        dist_scale, chunk_size,
     )
+
+
+def _check_strategy(strategy: str) -> None:
+    if strategy != "partial":
+        raise ValueError(
+            f"unknown strategy {strategy!r}; expected 'partial' or 'crossjoin'"
+        )
+
+
+def _dist(metric: str, vec_col: str, qvec_col: str, dist_scale: int | None) -> Column:
+    d = distance_col(metric, F.col(vec_col), F.col(qvec_col))
+    return d if dist_scale is None else pround(d, dist_scale)
+
+
+def _rank(
+    frame: DataFrame, k: int, qid_col: str, id_col: str, *extra: str
+) -> DataFrame:
+    """The finishing window: exact (distance, id) top-k per query over
+    (qid_col, id_col, *extra, distance) rows."""
     w = Window.partitionBy(qid_col).orderBy(F.col("distance").asc(), F.col(id_col).asc())
     return (
-        partial.withColumn("rank", F.row_number().over(w))
+        frame.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
-        .select(qid_col, id_col, "distance", "rank")
+        .select(qid_col, id_col, *extra, "distance", "rank")
     )
 
 
@@ -215,12 +203,17 @@ def _knn_join_chunked(
     qvec_col: str,
     dist_scale: int | None,
     chunk_size: int,
+    label_col: str | None = None,
+    qlabel_col: str | None = None,
 ) -> DataFrame:
-    """strategy='chunked' body: bounded query blocks -> union of partial
-    frames -> one finishing window. See knn_join's docstring for the cost
-    model. The qid hash-split is uniform, and chunk_size is capped at
-    MAX_COLLECTED_QUERIES // 2 so even a 2x hash imbalance stays inside the
-    driver ceiling; an actual breach still fail-louds."""
+    """The block loop behind strategy='partial' for knn_join and
+    hard_negatives: route by query count into one or ceil(q / chunk_size)
+    query blocks -> union of `_partial_frame`s -> one finishing window. See
+    knn_join's docstring for the cost model. The qid hash-split is uniform,
+    and chunk_size is capped at MAX_COLLECTED_QUERIES // 2 so even a 2x hash
+    imbalance stays inside the driver ceiling; an actual breach still
+    fail-louds. With the label pair, query labels travel in each block's
+    broadcast and the kernel masks same-label pairs."""
     if chunk_size < 1:
         raise ValueError(f"chunk_size must be >= 1, got {chunk_size}")
     if chunk_size > MAX_COLLECTED_QUERIES // 2:
@@ -230,61 +223,65 @@ def _knn_join_chunked(
             f"({MAX_COLLECTED_QUERIES}) would be gone. Use more, smaller "
             "chunks; the per-chunk cost is one data-side scan."
         )
-    spark = data.sparkSession
-    out_schema = StructType(
-        [
-            StructField(qid_col, LongType()),
-            StructField(id_col, LongType()),
-            StructField("distance", DoubleType()),
-        ]
-    )
-    # the loop filters this frame once per block — persist the narrow
-    # projection for the loop, release it after (the returned plan holds the
-    # query vectors in broadcasts and never references the query frame)
-    qnarrow = queries.select(qid_col, qvec_col).persist()
-    try:
-        q_count = qnarrow.count()
-        if q_count == 0:
-            empty = out_schema.add(StructField("rank", IntegerType()))
-            return spark.createDataFrame([], empty)
-        n_chunks = -(-q_count // chunk_size)  # ceil
-        chunk_key = F.pmod(
-            F.xxhash64(F.col(qid_col), F.lit("knn_chunk")), F.lit(n_chunks)
+    labels = [label_col] if label_col is not None else []
+    qnarrow = queries.select(qid_col, qvec_col, *([qlabel_col] if labels else []))
+
+    def frame(qrows: list) -> DataFrame:
+        return _partial_frame(
+            data, qrows, k, metric, id_col, vec_col, qid_col, dist_scale, label_col
         )
+
+    # limit(chunk_size + 1) bounds what the driver materializes: a query side
+    # that fits is the single block, a larger one routes to the hash split
+    qrows = qnarrow.limit(chunk_size + 1).collect()
+    if len(qrows) <= chunk_size:
+        frames = [frame(qrows)] if qrows else []
+    else:
         frames = []
-        for c in range(n_chunks):
-            qrows = (
-                qnarrow.where(chunk_key == c)
-                .limit(MAX_COLLECTED_QUERIES + 1)
-                .collect()
+        # the loop filters this frame once per block — persist the narrow
+        # projection for the loop, release it after (the returned plan holds
+        # the query vectors in broadcasts and never references the query frame)
+        qnarrow = qnarrow.persist()
+        try:
+            n_chunks = -(-qnarrow.count() // chunk_size)  # ceil
+            chunk_key = F.pmod(
+                F.xxhash64(F.col(qid_col), F.lit("knn_chunk")), F.lit(n_chunks)
             )
-            if len(qrows) > MAX_COLLECTED_QUERIES:
-                raise ValueError(
-                    f"strategy='chunked': query block {c}/{n_chunks} holds "
-                    f">{MAX_COLLECTED_QUERIES} rows — the qid hash is "
-                    "pathologically imbalanced (are qids constant?). Lower "
-                    "chunk_size or repair the query ids."
+            for c in range(n_chunks):
+                block = (
+                    qnarrow.where(chunk_key == c)
+                    .limit(MAX_COLLECTED_QUERIES + 1)
+                    .collect()
                 )
-            if not qrows:
-                continue
-            frames.append(
-                _partial_frame(
-                    data, qrows, k, metric, id_col, vec_col, qid_col, dist_scale
-                )
-            )
-    finally:
-        qnarrow.unpersist()
+                if len(block) > MAX_COLLECTED_QUERIES:
+                    raise ValueError(
+                        f"query block {c}/{n_chunks} holds "
+                        f">{MAX_COLLECTED_QUERIES} rows — the qid hash is "
+                        "pathologically imbalanced (are qids constant?). Lower "
+                        "chunk_size or repair the query ids."
+                    )
+                if block:
+                    frames.append(frame(block))
+        finally:
+            qnarrow.unpersist()
+    if not frames:
+        schema = _frame_schema(data, qid_col, id_col, label_col)
+        return data.sparkSession.createDataFrame(
+            [], schema.add(StructField("rank", IntegerType()))
+        )
     union = frames[0]
     for f in frames[1:]:
         union = union.unionByName(f)
-    w = Window.partitionBy(qid_col).orderBy(
-        F.col("distance").asc(), F.col(id_col).asc()
-    )
-    return (
-        union.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(qid_col, id_col, "distance", "rank")
-    )
+    return _rank(union, k, qid_col, id_col, *labels)
+
+
+def _frame_schema(
+    data: DataFrame, qid_col: str, id_col: str, label_col: str | None
+) -> StructType:
+    fields = [StructField(qid_col, LongType()), StructField(id_col, LongType())]
+    if label_col is not None:
+        fields.append(StructField(label_col, data.select(label_col).schema[0].dataType))
+    return StructType(fields + [StructField("distance", DoubleType())])
 
 
 def _partial_frame(
@@ -296,14 +293,13 @@ def _partial_frame(
     vec_col: str,
     qid_col: str,
     dist_scale: int | None,
+    label_col: str | None = None,
 ) -> DataFrame:
     """The partial-top-k mapInPandas frame for one broadcast query block
     (no finishing window): per Arrow batch a BLAS distance kernel keeps the
-    k best rows per query, so downstream sees <= (#batches x q x k) rows.
-    Shared by strategy='partial' (one block) and strategy='chunked' (one
-    frame per bounded block, unioned).
+    k best rows per query, so downstream sees <= (#tasks x q x k) rows.
 
-    Kernel shape (sized for 100k-query blocks, not just autotune samples):
+    Kernel shape (sized for 50k-query blocks, not just autotune samples):
     - queries are processed in slices so the distance matrix never exceeds
       ~_Q_BLOCK_ELEMS doubles regardless of block size;
     - the exact (distance, id) top-k is fully vectorized — batch rows are
@@ -314,28 +310,29 @@ def _partial_frame(
     - a running (k x q) best-so-far buffer merges across Arrow batches and
       the task emits ONCE at the end — shuffle volume is tasks*q*k, not
       batches*q*k (a 128 MB task holds ~100 batches; emitting per batch
-      would inflate the exchange 100x at scale)."""
+      would inflate the exchange 100x at scale).
+
+    With `label_col` (hard_negatives), each query row carries its label
+    third: same-label pairs score +inf BEFORE ranking, the data label rides
+    through the running buffer, and masked survivors are dropped at emit —
+    a task with fewer than k negatives emits only its real candidates.
+    Without it, non-finite distances are kept exactly as computed."""
     qids = np.array([r[0] for r in qrows], dtype=np.int64)
     Q = np.array([list(map(float, r[1])) for r in qrows], dtype=np.float64)
-    spark = data.sparkSession
-    bqids = spark.sparkContext.broadcast(qids)
-    bQ = spark.sparkContext.broadcast(Q)
-
-    out_schema = StructType(
-        [
-            StructField(qid_col, LongType()),
-            StructField(id_col, LongType()),
-            StructField("distance", DoubleType()),
-        ]
-    )
+    sc = data.sparkSession.sparkContext
+    bqids = sc.broadcast(qids)
+    bQ = sc.broadcast(Q)
+    masked = label_col is not None
+    blab = sc.broadcast(np.array([r[2] for r in qrows], dtype=object)) if masked else None
 
     def partial_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         qi, Qm = bqids.value, bQ.value
+        ql = blab.value if masked else None
         nq, dim = Qm.shape[0], (Qm.shape[1] if Qm.ndim == 2 else 1)
         # running per-task top-k: unfilled slots carry (+inf, PAD) so they
         # sort last under the (distance, id) order and are dropped at emit
         PAD = np.iinfo(np.int64).max
-        best_d = best_i = None
+        best_d = best_i = best_l = None
         for pdf in batches:
             n = len(pdf)
             if n == 0:
@@ -343,6 +340,8 @@ def _partial_frame(
             if best_d is None:
                 best_d = np.full((k, nq), np.inf)
                 best_i = np.full((k, nq), PAD, dtype=np.int64)
+                if masked:
+                    best_l = np.full((k, nq), None, dtype=object)
             X = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[vec_col].to_numpy()])
             ids = pdf[id_col].to_numpy(dtype=np.int64)
             # pre-sort rows by id: the stable per-column argsort below then
@@ -350,41 +349,53 @@ def _partial_frame(
             # (distance, id) order the finishing window expects
             perm = np.argsort(ids, kind="stable")
             X, ids = X[perm], ids[perm]
+            if masked:
+                labs = pdf[label_col].to_numpy()[perm]
             kk = min(k, n)
             # hamming's kernel materializes n*q*dim comparisons; the GEMM
             # metrics only n*q — bound the slice accordingly
             per_pair = dim if metric == "hamming" else 1
             qb = max(1, _Q_BLOCK_ELEMS // max(n * per_pair, 1))
             for s0 in range(0, nq, qb):
-                D = _np_distances(metric, X, Qm[s0 : s0 + qb])
+                sl = slice(s0, s0 + qb)
+                D = _np_distances(metric, X, Qm[sl])
                 if dist_scale is not None:
                     s = float(10**dist_scale)
                     D = np.floor(D * s + 0.5) / s  # portable rounding (matches pround)
+                if masked:
+                    D = np.where(labs[:, None] == ql[None, sl], np.inf, D)
                 top = np.argsort(D, axis=0, kind="stable")[:kk]  # (kk, qb')
                 # merge this batch's top-kk into the running best: stack,
                 # order by id (stable), then by distance (stable) — exact
                 # (distance, id) over both blocks; PAD rows (inf) sink
-                md = np.vstack(
-                    [best_d[:, s0 : s0 + qb], np.take_along_axis(D, top, axis=0)]
-                )
-                mi = np.vstack([best_i[:, s0 : s0 + qb], ids[top]])
+                md = np.vstack([best_d[:, sl], np.take_along_axis(D, top, axis=0)])
+                mi = np.vstack([best_i[:, sl], ids[top]])
                 by_id = np.argsort(mi, axis=0, kind="stable")
                 md = np.take_along_axis(md, by_id, axis=0)
                 mi = np.take_along_axis(mi, by_id, axis=0)
                 by_d = np.argsort(md, axis=0, kind="stable")[:k]
-                best_d[:, s0 : s0 + qb] = np.take_along_axis(md, by_d, axis=0)
-                best_i[:, s0 : s0 + qb] = np.take_along_axis(mi, by_d, axis=0)
+                best_d[:, sl] = np.take_along_axis(md, by_d, axis=0)
+                best_i[:, sl] = np.take_along_axis(mi, by_d, axis=0)
+                if masked:
+                    ml = np.take_along_axis(np.vstack([best_l[:, sl], labs[top]]), by_id, axis=0)
+                    best_l[:, sl] = np.take_along_axis(ml, by_d, axis=0)
         if best_d is not None:
             keep = best_i.ravel() != PAD
-            yield pd.DataFrame(
-                {
-                    qid_col: np.broadcast_to(qi[None, :], best_i.shape).ravel()[keep],
-                    id_col: best_i.ravel()[keep],
-                    "distance": best_d.ravel()[keep],
-                }
-            )
+            if masked:
+                keep &= np.isfinite(best_d.ravel())
+            out = {
+                qid_col: np.broadcast_to(qi[None, :], best_i.shape).ravel()[keep],
+                id_col: best_i.ravel()[keep],
+            }
+            if masked:
+                out[label_col] = best_l.ravel()[keep]
+            out["distance"] = best_d.ravel()[keep]
+            yield pd.DataFrame(out)
 
-    return data.select(id_col, vec_col).mapInPandas(partial_topk, out_schema)
+    cols = [id_col, vec_col] + ([label_col] if masked else [])
+    return data.select(*cols).mapInPandas(
+        partial_topk, _frame_schema(data, qid_col, id_col, label_col)
+    )
 
 
 def hard_negatives(
@@ -405,252 +416,38 @@ def hard_negatives(
     """Contrastive hard-negative mining: for each query vector, the k nearest
     data vectors whose label DIFFERS from the query's — the pairs that teach
     an embedding model the most (closest in space, known to be different).
-    The training-pair counterpart of the exact-kNN join (J2): same execution
-    strategies, with the label-mismatch constraint applied BEFORE ranking so
-    the result is the true top-k among negatives, not a post-filtered top-k.
+    The training-pair counterpart of the exact-kNN join (J2): the same
+    kernel, block loop and strategies as `knn_join`, with the label-mismatch
+    constraint applied BEFORE ranking so the result is the true top-k among
+    negatives, not a post-filtered top-k.
 
     Returns (qid_col, id_col, label_col, distance, rank). Rows with NULL
     labels are excluded from both sides (a null label can neither match nor
-    mismatch). Strategies mirror knn_join: "partial" (bounded query sets —
-    queries+labels broadcast into an Arrow-batched kernel that masks
-    same-label pairs per batch and emits per-task top-k), "chunked" (exact
-    large-vs-large: bounded query blocks through the same kernel, unioned,
-    one finishing window — mining negatives for a full training set, not
-    just a sample), and "crossjoin" (declarative; the oracle-parity path).
+    mismatch). `strategy` is "partial" (default: queries and their labels
+    broadcast into the masked kernel; the query count picks one block up to
+    `chunk_size` queries or ceil(q / chunk_size) hash blocks above it, so
+    mining negatives for a full training set, not just a sample, stays
+    exact; 50,001–100,000 queries now run as two blocks) or "crossjoin"
+    (declarative; the oracle-parity reference).
     """
     if metric not in METRICS:
         raise ValueError(f"unknown metric {metric!r}; expected one of {METRICS}")
     data = data.where(F.col(label_col).isNotNull())
     queries = queries.where(F.col(qlabel_col).isNotNull())
-    if strategy == "auto":
-        strategy = (
-            "partial"
-            if queries.limit(MAX_COLLECTED_QUERIES + 1).count() <= MAX_COLLECTED_QUERIES
-            else "chunked"
-        )
-    if strategy == "chunked":
-        return _hard_negatives_chunked(
-            data, queries, k, metric, id_col, vec_col, label_col, qid_col,
-            qvec_col, qlabel_col, dist_scale, chunk_size,
-        )
     if strategy == "crossjoin":
-        d = distance_col(metric, F.col(vec_col), F.col(qvec_col))
-        if dist_scale is not None:
-            d = pround(d, dist_scale)
         joined = (
             data.select(id_col, vec_col, label_col)
             .crossJoin(F.broadcast(queries.select(qid_col, qvec_col, qlabel_col)))
             .where(F.col(label_col) != F.col(qlabel_col))
         )
-        w = Window.partitionBy(qid_col).orderBy(F.col("distance").asc(), F.col(id_col).asc())
-        return (
-            joined.withColumn("distance", d)
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(qid_col, id_col, label_col, "distance", "rank")
+        return _rank(
+            joined.withColumn("distance", _dist(metric, vec_col, qvec_col, dist_scale)),
+            k, qid_col, id_col, label_col,
         )
-    if strategy != "partial":
-        raise ValueError(f"unknown strategy {strategy!r}")
-
-    qrows = (
-        queries.select(qid_col, qvec_col, qlabel_col)
-        .limit(MAX_COLLECTED_QUERIES + 1)
-        .collect()
-    )
-    if len(qrows) > MAX_COLLECTED_QUERIES:
-        raise ValueError(
-            f"strategy='partial' collects the query side to the driver and it "
-            f"exceeds {MAX_COLLECTED_QUERIES} rows; mine negatives for the "
-            "full set with strategy='chunked' (bounded query blocks), or use "
-            "ivf.ivf_knn_join on a label-partitioned corpus for the ANN path"
-        )
-    partial = _partial_neg_frame(
-        data, qrows, k, metric, id_col, vec_col, label_col, qid_col, dist_scale
-    )
-    w = Window.partitionBy(qid_col).orderBy(F.col("distance").asc(), F.col(id_col).asc())
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(qid_col, id_col, label_col, "distance", "rank")
-    )
-
-
-def _partial_neg_frame(
-    data: DataFrame,
-    qrows: list,
-    k: int,
-    metric: str,
-    id_col: str,
-    vec_col: str,
-    label_col: str,
-    qid_col: str,
-    dist_scale: int | None,
-) -> DataFrame:
-    """hard_negatives' per-task partial frame: the `_partial_frame` kernel
-    shape (query slices bounded by _Q_BLOCK_ELEMS, id-presort + stable
-    argsort for exact (distance, id) ties, running per-task top-k emitted
-    once per task) with the label-mismatch mask applied INSIDE the batch
-    before ranking (masked pairs score +inf and are dropped at emit)."""
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    Q = np.array([list(map(float, r[1])) for r in qrows], dtype=np.float64)
-    qlabels = np.array([r[2] for r in qrows], dtype=object)
-    spark = data.sparkSession
-    bqids = spark.sparkContext.broadcast(qids)
-    bQ = spark.sparkContext.broadcast(Q)
-    blab = spark.sparkContext.broadcast(qlabels)
-
-    label_field = data.select(label_col).schema.fields[0]
-    out_schema = StructType(
-        [
-            StructField(qid_col, LongType()),
-            StructField(id_col, LongType()),
-            StructField(label_col, label_field.dataType),
-            StructField("distance", DoubleType()),
-        ]
-    )
-
-    def partial_topk_neg(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qi, Qm, ql = bqids.value, bQ.value, blab.value
-        nq, dim = Qm.shape[0], (Qm.shape[1] if Qm.ndim == 2 else 1)
-        PAD = np.iinfo(np.int64).max
-        best_d = best_i = best_l = None
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            if best_d is None:
-                best_d = np.full((k, nq), np.inf)
-                best_i = np.full((k, nq), PAD, dtype=np.int64)
-                best_l = np.full((k, nq), None, dtype=object)
-            X = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[vec_col].to_numpy()])
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            labs = pdf[label_col].to_numpy()
-            perm = np.argsort(ids, kind="stable")
-            X, ids, labs = X[perm], ids[perm], labs[perm]
-            kk = min(k, n)
-            per_pair = dim if metric == "hamming" else 1
-            qb = max(1, _Q_BLOCK_ELEMS // max(n * per_pair, 1))
-            for s0 in range(0, nq, qb):
-                D = _np_distances(metric, X, Qm[s0 : s0 + qb])
-                if dist_scale is not None:
-                    s = float(10**dist_scale)
-                    D = np.floor(D * s + 0.5) / s
-                # mask positives (same label) out of the candidate set
-                D = np.where(labs[:, None] == ql[None, s0 : s0 + qb], np.inf, D)
-                top = np.argsort(D, axis=0, kind="stable")[:kk]
-                md = np.vstack(
-                    [best_d[:, s0 : s0 + qb], np.take_along_axis(D, top, axis=0)]
-                )
-                mi = np.vstack([best_i[:, s0 : s0 + qb], ids[top]])
-                ml = np.vstack([best_l[:, s0 : s0 + qb], labs[top]])
-                by_id = np.argsort(mi, axis=0, kind="stable")
-                md = np.take_along_axis(md, by_id, axis=0)
-                mi = np.take_along_axis(mi, by_id, axis=0)
-                ml = np.take_along_axis(ml, by_id, axis=0)
-                by_d = np.argsort(md, axis=0, kind="stable")[:k]
-                best_d[:, s0 : s0 + qb] = np.take_along_axis(md, by_d, axis=0)
-                best_i[:, s0 : s0 + qb] = np.take_along_axis(mi, by_d, axis=0)
-                best_l[:, s0 : s0 + qb] = np.take_along_axis(ml, by_d, axis=0)
-        if best_d is not None:
-            flat_d = best_d.ravel()
-            # drop PAD slots AND masked (+inf) survivors: a task with fewer
-            # than k negatives emits only its real candidates
-            keep = (best_i.ravel() != PAD) & np.isfinite(flat_d)
-            yield pd.DataFrame(
-                {
-                    qid_col: np.broadcast_to(qi[None, :], best_i.shape).ravel()[keep],
-                    id_col: best_i.ravel()[keep],
-                    label_col: best_l.ravel()[keep],
-                    "distance": flat_d[keep],
-                }
-            )
-
-    return data.select(id_col, vec_col, label_col).mapInPandas(
-        partial_topk_neg, out_schema
-    )
-
-
-def _hard_negatives_chunked(
-    data: DataFrame,
-    queries: DataFrame,
-    k: int,
-    metric: str,
-    id_col: str,
-    vec_col: str,
-    label_col: str,
-    qid_col: str,
-    qvec_col: str,
-    qlabel_col: str,
-    dist_scale: int | None,
-    chunk_size: int,
-) -> DataFrame:
-    """strategy='chunked' for hard-negative mining: identical block plan to
-    `_knn_join_chunked` (bounded query blocks -> union of per-task partial
-    frames -> one finishing window), with query labels traveling in each
-    block's broadcast."""
-    if chunk_size < 1:
-        raise ValueError(f"chunk_size must be >= 1, got {chunk_size}")
-    if chunk_size > MAX_COLLECTED_QUERIES // 2:
-        raise ValueError(
-            f"chunk_size {chunk_size} > {MAX_COLLECTED_QUERIES // 2} — the "
-            "2x hash-imbalance margin over the driver ceiling "
-            f"({MAX_COLLECTED_QUERIES}) would be gone. Use more, smaller "
-            "chunks; the per-chunk cost is one data-side scan."
-        )
-    spark = data.sparkSession
-    label_field = data.select(label_col).schema.fields[0]
-    qnarrow = queries.select(qid_col, qvec_col, qlabel_col).persist()
-    try:
-        q_count = qnarrow.count()
-        if q_count == 0:
-            empty = StructType(
-                [
-                    StructField(qid_col, LongType()),
-                    StructField(id_col, LongType()),
-                    StructField(label_col, label_field.dataType),
-                    StructField("distance", DoubleType()),
-                    StructField("rank", IntegerType()),
-                ]
-            )
-            return spark.createDataFrame([], empty)
-        n_chunks = -(-q_count // chunk_size)
-        chunk_key = F.pmod(
-            F.xxhash64(F.col(qid_col), F.lit("knn_chunk")), F.lit(n_chunks)
-        )
-        frames = []
-        for c in range(n_chunks):
-            qrows = (
-                qnarrow.where(chunk_key == c)
-                .limit(MAX_COLLECTED_QUERIES + 1)
-                .collect()
-            )
-            if len(qrows) > MAX_COLLECTED_QUERIES:
-                raise ValueError(
-                    f"strategy='chunked': query block {c}/{n_chunks} holds "
-                    f">{MAX_COLLECTED_QUERIES} rows — the qid hash is "
-                    "pathologically imbalanced (are qids constant?). Lower "
-                    "chunk_size or repair the query ids."
-                )
-            if not qrows:
-                continue
-            frames.append(
-                _partial_neg_frame(
-                    data, qrows, k, metric, id_col, vec_col, label_col,
-                    qid_col, dist_scale,
-                )
-            )
-    finally:
-        qnarrow.unpersist()
-    union = frames[0]
-    for f in frames[1:]:
-        union = union.unionByName(f)
-    w = Window.partitionBy(qid_col).orderBy(
-        F.col("distance").asc(), F.col(id_col).asc()
-    )
-    return (
-        union.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(qid_col, id_col, label_col, "distance", "rank")
+    _check_strategy(strategy)
+    return _knn_join_chunked(
+        data, queries, k, metric, id_col, vec_col, qid_col, qvec_col,
+        dist_scale, chunk_size, label_col, qlabel_col,
     )
 
 
@@ -667,31 +464,48 @@ def ground_truth(
     """Exact-kNN ground truth (reference N3, index_autotune/mod.rs:189-219):
     sample `n_queries` rows, return (id, v, neighbors array<long> ordered by distance).
 
-    The reference samples with `ORDER BY RANDOM() LIMIT n`; we use a seeded
-    `orderBy(rand(seed))` for reproducibility.
+    The reference samples with `ORDER BY RANDOM() LIMIT n`; we order by a
+    seeded hash of the id (ties by id) instead, so the sample depends only on
+    the ids — not on partitioning, core count or which columns a caller
+    projects — and the final join re-evaluates the very same rows.
     """
     queries = (
         df.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec"))
-        .orderBy(F.rand(seed))
+        .orderBy(F.xxhash64(F.col("query_id"), F.lit(seed)), F.col("query_id"))
         .limit(n_queries)
     )
     kk = k + 1 if exclude_self else k
     nn = knn_join(df, queries, k=kk, metric=metric, id_col=id_col, vec_col=vec_col)
     if exclude_self:
-        nn = (
-            nn.where(F.col("query_id") != F.col(id_col))
-            .withColumn(
-                "rank",
-                F.row_number().over(
-                    Window.partitionBy("query_id").orderBy(F.col("distance").asc(), F.col(id_col).asc())
-                ),
-            )
-            .where(F.col("rank") <= k)
-        )
+        nn = _rank(nn.where(F.col("query_id") != F.col(id_col)), k, "query_id", id_col)
     neighbors = collect_neighbors(nn, qid_col="query_id", id_col=id_col)
     return queries.join(neighbors.withColumnRenamed("id", "query_id"), "query_id").select(
         F.col("query_id").alias("id"), F.col("query_vec").alias("v"), "neighbors"
     )
+
+
+def answer_key(
+    df: DataFrame,
+    n_queries: int,
+    k: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    seed: int = 42,
+) -> tuple[DataFrame, list[tuple[int, list[float]]]]:
+    """The evaluation answer key every recall harness scores against: ONE
+    exact l2sq `ground_truth` sample, collected once, returned as the
+    (id, neighbors) truth table `recall` consumes and the [(id, vec)] query
+    list the approximate searches take. Both come from the same collected
+    rows, so the truth and the queries cannot drift apart."""
+    rows = ground_truth(
+        df, n_queries=n_queries, k=k, metric="l2sq", id_col=id_col,
+        vec_col=vec_col, seed=seed,
+    ).collect()
+    truth = df.sparkSession.createDataFrame(
+        [(int(r["id"]), [int(x) for x in r["neighbors"]]) for r in rows],
+        "id long, neighbors array<long>",
+    )
+    return truth, [(int(r["id"]), [float(x) for x in r["v"]]) for r in rows]
 
 
 def collect_neighbors(nn: DataFrame, qid_col: str = "query_id", id_col: str = "vec_id") -> DataFrame:
@@ -711,13 +525,12 @@ def recall(truth: DataFrame, result: DataFrame, k: int) -> float:
     """Mean recall % truncated to 2 dp (reference N4 definition:
     |truth ∩ result| / k · 100 averaged, index_autotune/mod.rs:238-252).
 
-    Both inputs: (id, neighbors array). Computed with `array_intersect` (J3)."""
+    Both inputs: (id, neighbors array). Computed with `array_intersect` (J3).
+    The mean runs over every truth query: one the result never answered
+    counts as 0 hits, not as absent."""
     j = truth.select("id", F.col("neighbors").alias("t")).join(
-        result.select("id", F.col("neighbors").alias("r")), "id"
+        result.select("id", F.col("neighbors").alias("r")), "id", "left"
     )
-    mean = (
-        j.select((F.size(F.array_intersect("t", "r")) / F.lit(float(k)) * 100.0).alias("rec"))
-        .agg(F.avg("rec"))
-        .first()[0]
-    )
+    hits = F.when(F.col("r").isNull(), 0).otherwise(F.size(F.array_intersect("t", "r")))
+    mean = j.select((hits / F.lit(float(k)) * 100.0).alias("rec")).agg(F.avg("rec")).first()[0]
     return math.floor(mean * 100.0) / 100.0

@@ -127,23 +127,14 @@ def mrl_recall_vs_exact(
     queries — the honesty dial every approximate path here carries. On
     MRL-trained embeddings the prefix preserves neighborhoods; on arbitrary
     embeddings this measures how much signal the leading dims carry."""
-    from lantern_extras_spark.operators.knn import collect_neighbors, ground_truth, recall
+    from lantern_extras_spark.operators.knn import answer_key, collect_neighbors, recall
 
-    truth = ground_truth(df, n_queries=n_queries, k=k, metric="l2sq",
-                         id_col=id_col, vec_col=vec_col, seed=seed).collect()
-    spark = df.sparkSession
-    queries = spark.createDataFrame(
-        [(int(r["id"]), [float(x) for x in r["v"]]) for r in truth],
-        "query_id long, query_vec array<double>",
-    )
+    truth, qlist = answer_key(df, n_queries, k, id_col=id_col, vec_col=vec_col, seed=seed)
+    queries = df.sparkSession.createDataFrame(qlist, "query_id long, query_vec array<double>")
     res = collect_neighbors(
         mrl_knn_join(df, queries, d_prefix, k=k, oversample=oversample,
                      id_col=id_col, vec_col=vec_col)
         .withColumnRenamed("rnk", "rank"),
         qid_col="query_id", id_col=id_col,
     )
-    truth_df = spark.createDataFrame(
-        [(r["id"], [int(x) for x in r["neighbors"]]) for r in truth],
-        "id long, neighbors array<long>",
-    )
-    return recall(truth_df, res, k)
+    return recall(truth, res, k)

@@ -187,27 +187,18 @@ def sq8_recall_vs_exact(
     """Recall of SQ8 top-k against exact float kNN over sampled queries —
     the honesty dial every approximate path here carries (N4-style eval,
     same harness as `ivf_recall_vs_exact`)."""
-    from lantern_extras_spark.operators.knn import collect_neighbors, ground_truth, recall
+    from lantern_extras_spark.operators.knn import answer_key, collect_neighbors, recall
 
     mins, maxs = sq8_train(df, vec_col)
     coded = sq8_encode(df, mins, maxs, vec_col=vec_col, drop_vec=False).cache()
     coded.count()
-    truth = ground_truth(df, n_queries=n_queries, k=k, metric="l2sq",
-                         id_col=id_col, vec_col=vec_col, seed=seed).collect()
-    spark = df.sparkSession
-    queries = spark.createDataFrame(
-        [(int(r["id"]), [float(x) for x in r["v"]]) for r in truth],
-        "query_id long, query_vec array<double>",
-    )
+    truth, qlist = answer_key(df, n_queries, k, id_col=id_col, vec_col=vec_col, seed=seed)
+    queries = df.sparkSession.createDataFrame(qlist, "query_id long, query_vec array<double>")
     res = collect_neighbors(
         sq8_knn_join(coded, queries, mins, maxs, k=k, id_col=id_col),
         qid_col="query_id", id_col=id_col,
     )
-    truth_df = spark.createDataFrame(
-        [(r["id"], [int(x) for x in r["neighbors"]]) for r in truth],
-        "id long, neighbors array<long>",
-    )
-    rec = recall(truth_df, res, k)
+    rec = recall(truth, res, k)
     coded.unpersist()
     return rec
 

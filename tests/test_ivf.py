@@ -58,22 +58,20 @@ def test_ivf_topk_restricts_scan(spark, clustered):
 
 
 def test_ivf_pq_end_to_end(spark, clustered):
-    from lantern_extras_spark.operators.knn import ground_truth, recall
+    from lantern_extras_spark.operators.knn import answer_key, recall
 
     coded, cents, cb = IVF.build_ivf_pq(clustered, nlist=4, splits=8, k=32, max_train_rows=200)
     coded = coded.cache()
     assert coded.columns == ["vec_id", "embedding", "cell", "pqvec"]
     assert coded.count() == 200
-    truth = ground_truth(clustered, n_queries=4, k=5, seed=3).collect()
-    res = []
-    for r in truth:
-        ids = [x[0] for x in IVF.ivf_pq_topk(coded, cents, cb, list(map(float, r["v"])), k=5, nprobe=2).collect()]
-        res.append((r["id"], ids))
-    tdf = spark.createDataFrame([(r["id"], [int(x) for x in r["neighbors"]]) for r in truth],
-                                "id long, neighbors array<long>")
+    truth, queries = answer_key(clustered, 4, 5, seed=3)
+    res = [
+        (qid, [x[0] for x in IVF.ivf_pq_topk(coded, cents, cb, qv, k=5, nprobe=2).collect()])
+        for qid, qv in queries
+    ]
     rdf = spark.createDataFrame(res, "id long, neighbors array<long>")
     # tightly clustered fixture: residual PQ at nprobe=2 must stay accurate
-    assert recall(tdf, rdf, 5) >= 60.0
+    assert recall(truth, rdf, 5) >= 60.0
     coded.unpersist()
 
 
@@ -233,12 +231,20 @@ def test_ivf_knn_join_cosine_metric(spark, join_sides):
 
 
 def test_knn_join_partial_query_cap_fails_loud(spark, join_sides, monkeypatch):
+    """20 query rows over a patched driver cap of 5: the default path routes
+    them to hash-split blocks and stays exact; only a block the qid hash
+    cannot split (constant ids) still fails loud at the cap."""
     from lantern_extras_spark.operators import knn as K
 
     corpus, queries = join_sides
     monkeypatch.setattr(K, "MAX_COLLECTED_QUERIES", 5)
-    with pytest.raises(ValueError, match="ivf_knn_join"):
-        K.knn_join(corpus, queries, k=3)  # 20 query rows > patched cap 5
+    key = lambda df: sorted((r["query_id"], r["rank"], r["vec_id"]) for r in df.collect())
+    got = K.knn_join(corpus, queries, k=3, dist_scale=6, chunk_size=2)
+    want = K.knn_join(corpus, queries, k=3, strategy="crossjoin", dist_scale=6)
+    assert key(got) == key(want) and len(key(got)) == 20 * 3
+    constant = queries.withColumn("query_id", F.lit(7).cast("long"))
+    with pytest.raises(ValueError, match="imbalanced"):
+        K.knn_join(corpus, constant, k=3, chunk_size=2)
 
 
 def test_ivf_range_join_full_probe_equals_bruteforce(spark, join_sides):

@@ -24,14 +24,14 @@ def test_partial_equals_crossjoin(spark, emb, metric):
 
 @pytest.mark.parametrize("metric", ["l2sq", "cos"])
 def test_chunked_equals_crossjoin_multi_chunk(spark, emb, metric):
-    """chunked must return the exact crossjoin answer while splitting the
-    query side across several blocks (chunk_size forces >= 3 chunks here)."""
+    """The default path must return the exact crossjoin answer while
+    splitting the query side across several blocks (chunk_size forces >= 3
+    chunks here)."""
     q = emb.where("vec_id < 12").select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     data = emb.where("vec_id >= 12")
-    a = K.knn_join(data, q, k=7, metric=metric, strategy="chunked",
-                   dist_scale=6, chunk_size=4)
+    a = K.knn_join(data, q, k=7, metric=metric, dist_scale=6, chunk_size=4)
     b = K.knn_join(data, q, k=7, metric=metric, strategy="crossjoin",
                    dist_scale=6)
     ra = [(r["query_id"], r["rank"], r["vec_id"])
@@ -41,94 +41,117 @@ def test_chunked_equals_crossjoin_multi_chunk(spark, emb, metric):
     assert ra == rb and len(ra) == 12 * 7
 
 
+def _blocks(df):
+    """Number of partial-kernel query blocks in a result's plan."""
+    return df._jdf.queryExecution().optimizedPlan().toString().count("MapInPandas")
+
+
+def _key(df):
+    return [(r["query_id"], r["rank"], r["vec_id"])
+            for r in df.orderBy("query_id", "rank").collect()]
+
+
 def test_chunked_works_above_partial_driver_cap(spark, emb, monkeypatch):
-    """The whole point of 'chunked': a query side over MAX_COLLECTED_QUERIES
-    fail-louds under 'partial' but runs (exactly) under 'chunked' with no
-    single driver collect above the cap. Shrink the cap so the test stays
-    fast while exercising the real guard."""
+    """A query side above the driver cap runs exactly on the default path:
+    it routes to hash-split blocks, none collected above the cap. Shrink the
+    cap so the test stays fast while exercising the real guard."""
     monkeypatch.setattr(K, "MAX_COLLECTED_QUERIES", 8)
     q = emb.where("vec_id < 20").select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     data = emb.where("vec_id >= 20")
-    with pytest.raises(ValueError, match="strategy='chunked'"):
-        K.knn_join(data, q, k=3, metric="cos", strategy="partial")
-    got = K.knn_join(data, q, k=3, metric="cos", strategy="chunked",
-                     dist_scale=6, chunk_size=4)
+    got = K.knn_join(data, q, k=3, metric="cos", dist_scale=6, chunk_size=4)
     want = K.knn_join(data, q, k=3, metric="cos", strategy="crossjoin",
                       dist_scale=6)
-    ga = [(r["query_id"], r["rank"], r["vec_id"])
-          for r in got.orderBy("query_id", "rank").collect()]
-    wa = [(r["query_id"], r["rank"], r["vec_id"])
-          for r in want.orderBy("query_id", "rank").collect()]
-    assert ga == wa and len(ga) == 20 * 3
+    assert _blocks(got) >= 2
+    ga = _key(got)
+    assert ga == _key(want) and len(ga) == 20 * 3
 
 
-def test_auto_strategy_routes_by_query_count(spark, emb, monkeypatch):
-    """'auto' picks partial under the cap and chunked above it — same
-    answer either way."""
-    monkeypatch.setattr(K, "MAX_COLLECTED_QUERIES", 8)
+def test_partial_routes_by_query_count(spark, emb):
+    """The query count picks the blocks: up to chunk_size queries run as one
+    block, one more splits the query side — same answer either way, for
+    knn_join and (labels included) hard_negatives. The strategies the
+    routing replaced are rejected."""
     data = emb.where("vec_id >= 20")
-    small = emb.where("vec_id < 4").select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    big = emb.where("vec_id < 20").select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    want_small = K.knn_join(data, small, k=3, metric="cos",
-                            strategy="crossjoin", dist_scale=6)
-    got_small = K.knn_join(data, small, k=3, metric="cos", strategy="auto",
-                           dist_scale=6)
-    key = lambda df: [(r["query_id"], r["rank"], r["vec_id"])
-                      for r in df.orderBy("query_id", "rank").collect()]
-    assert key(got_small) == key(want_small)
-    # above the (shrunken) cap: auto must NOT raise — it routes to chunked
-    got_big = K.knn_join(data, big, k=3, metric="cos", strategy="auto",
-                         dist_scale=6, chunk_size=4)
-    want_big = K.knn_join(data, big, k=3, metric="cos", strategy="crossjoin",
+    cols = [F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")]
+    fits = emb.where("vec_id < 4").select(*cols)
+    over = emb.where("vec_id < 5").select(*cols)
+    for q, one_block in ((fits, True), (over, False)):
+        got = K.knn_join(data, q, k=3, metric="cos", dist_scale=6, chunk_size=4)
+        want = K.knn_join(data, q, k=3, metric="cos", strategy="crossjoin",
                           dist_scale=6)
-    assert key(got_big) == key(want_big)
-    # hard_negatives mirrors the routing
-    qb = emb.where("vec_id < 20").select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"),
-        F.col("label").alias("query_label"),
-    )
-    hn = K.hard_negatives(data, qb, k=3, metric="cos", strategy="auto",
-                          dist_scale=6, chunk_size=4)
+        assert (_blocks(got) == 1) is one_block
+        assert _key(got) == _key(want)
+    qb = emb.where("vec_id < 20").select(*cols, F.col("label").alias("query_label"))
+    hn = K.hard_negatives(data, qb, k=3, metric="cos", dist_scale=6, chunk_size=4)
     hw = K.hard_negatives(data, qb, k=3, metric="cos", strategy="crossjoin",
                           dist_scale=6)
     keyl = lambda df: [(r["query_id"], r["rank"], r["vec_id"], r["label"])
                        for r in df.orderBy("query_id", "rank").collect()]
+    assert _blocks(hn) >= 2
     assert keyl(hn) == keyl(hw)
+    for strategy in ("chunked", "auto"):
+        with pytest.raises(ValueError, match="unknown strategy"):
+            K.knn_join(data, fits, k=3, strategy=strategy)
+        with pytest.raises(ValueError, match="unknown strategy"):
+            K.hard_negatives(data, qb, k=3, strategy=strategy)
 
 
 def test_chunked_edge_cases(spark, emb):
     q0 = emb.where("vec_id < 0").select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    out = K.knn_join(emb, q0, k=3, strategy="chunked")
+    out = K.knn_join(emb, q0, k=3)
     assert out.count() == 0
     assert [f.name for f in out.schema.fields] == [
         "query_id", "vec_id", "distance", "rank"
     ]
     with pytest.raises(ValueError, match="chunk_size must be"):
-        K.knn_join(emb, q0, k=3, strategy="chunked", chunk_size=0)
+        K.knn_join(emb, q0, k=3, chunk_size=0)
     with pytest.raises(ValueError, match="hash-imbalance margin"):
-        K.knn_join(emb, q0, k=3, strategy="chunked",
-                   chunk_size=K.MAX_COLLECTED_QUERIES)
+        K.knn_join(emb, q0, k=3, chunk_size=K.MAX_COLLECTED_QUERIES)
 
 
 def test_chunked_releases_query_cache(spark, emb):
-    """The loop persists the narrow query projection; the returned plan must
-    not keep it cached (broadcasts carry the vectors)."""
+    """The block loop persists the narrow query projection; the returned
+    plan must not keep it cached (broadcasts carry the vectors)."""
     sc = spark.sparkContext
     n_cached = lambda: sc._jsc.sc().getPersistentRDDs().size()
     before = n_cached()
     q = emb.where("vec_id < 6").select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    K.knn_join(emb.where("vec_id >= 6"), q, k=3, strategy="chunked",
-               chunk_size=2).count()
+    K.knn_join(emb.where("vec_id >= 6"), q, k=3, chunk_size=2).count()
+    assert n_cached() <= before
+
+
+def test_default_path_job_budget(spark, emb):
+    """A bounded query side costs what the single-block plan always cost: on
+    4 parquet-backed queries, building and collecting the default knn_join
+    or hard_negatives runs at most 4 Spark jobs (query collect, kernel scan,
+    finishing exchange) and leaves nothing persisted."""
+    sc = spark.sparkContext
+    n_cached = lambda: sc._jsc.sc().getPersistentRDDs().size()
+    before = n_cached()
+    q = emb.where("vec_id < 4").select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"),
+        F.col("label").alias("query_label"),
+    )
+    data = emb.where("vec_id >= 4")
+    runs = {
+        "knn_join": lambda: K.knn_join(data, q.drop("query_label"), k=5, metric="cos"),
+        "hard_negatives": lambda: K.hard_negatives(data, q, k=5, metric="cos"),
+    }
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    for name, build in runs.items():
+        group = f"job-budget-{name}"
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            assert len(build().collect()) == 4 * 5
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", prev)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 4, name
     assert n_cached() <= before
 
 
@@ -168,6 +191,31 @@ def test_ground_truth_and_recall(spark, emb):
     assert K.recall(truth, broken, 4) == 75.0
 
 
+def test_ground_truth_sample_ignores_partitioning(spark):
+    """The sample depends only on the ids: the same rows whatever the
+    partitioning and whichever columns a caller projects."""
+    rng = np.random.RandomState(0)
+    df = spark.createDataFrame(
+        [(i, rng.rand(4).tolist()) for i in range(200)],
+        "vec_id long, embedding array<double>",
+    )
+    samples = set()
+    for parts in (1, 3):
+        gt = K.ground_truth(df.repartition(parts), n_queries=5, k=3, seed=42)
+        samples.add(tuple(sorted(r["id"] for r in gt.select("id").collect())))
+        samples.add(tuple(sorted(r["id"] for r in gt.collect())))
+    assert len(samples) == 1 and len(samples.pop()) == 5
+
+
+def test_recall_counts_unanswered_queries(spark):
+    """A truth query the result never answered scores 0 hits, not absent."""
+    t = spark.createDataFrame([(1, [1, 2, 3]), (2, [4, 5, 6])],
+                              "id long, neighbors array<long>")
+    r = spark.createDataFrame([(1, [1, 2, 3])], "id long, neighbors array<long>")
+    assert K.recall(t, r, 3) == 50.0
+    assert K.recall(t, r.limit(0), 3) == 0.0
+
+
 def test_recall_truncates_two_dp(spark):
     # 2/3 recall over k=3 = 66.666..% -> truncation gives 66.66 (reference
     # index_autotune/mod.rs:249-252 truncates, not rounds)
@@ -204,9 +252,9 @@ def test_hard_negatives_partial_equals_crossjoin(spark, emb):
 
 
 def test_hard_negatives_chunked_equals_crossjoin(spark, emb, monkeypatch):
-    """Chunked negative mining (full-training-set scale): multiple blocks
-    AND a query side above the (shrunken) partial cap must reproduce the
-    declarative answer exactly, labels included."""
+    """Negative mining for a full training set: a query side above the
+    (shrunken) driver cap routes to hash-split blocks on the default path
+    and must reproduce the declarative answer exactly, labels included."""
     monkeypatch.setattr(K, "MAX_COLLECTED_QUERIES", 8)
     q = emb.where("vec_id < 12").select(
         F.col("vec_id").alias("query_id"),
@@ -214,10 +262,7 @@ def test_hard_negatives_chunked_equals_crossjoin(spark, emb, monkeypatch):
         F.col("label").alias("query_label"),
     )
     data = emb.where("vec_id >= 12")
-    with pytest.raises(ValueError, match="strategy='chunked'"):
-        K.hard_negatives(data, q, k=4, metric="cos", strategy="partial")
-    a = K.hard_negatives(data, q, k=4, metric="cos", strategy="chunked",
-                         dist_scale=6, chunk_size=4)
+    a = K.hard_negatives(data, q, k=4, metric="cos", dist_scale=6, chunk_size=4)
     b = K.hard_negatives(data, q, k=4, metric="cos", strategy="crossjoin",
                          dist_scale=6)
     key = lambda df: [
@@ -225,11 +270,12 @@ def test_hard_negatives_chunked_equals_crossjoin(spark, emb, monkeypatch):
         for r in df.orderBy("query_id", "rank").collect()
     ]
     ra, rb = key(a), key(b)
+    assert _blocks(a) >= 2
     assert ra == rb and len(ra) > 0
     # empty-queries edge keeps the full 5-column schema (chunk_size must
     # respect the monkeypatched cap's margin here too)
     q0 = q.where("query_id < 0")
-    out = K.hard_negatives(data, q0, k=3, strategy="chunked", chunk_size=4)
+    out = K.hard_negatives(data, q0, k=3, chunk_size=4)
     assert out.count() == 0
     assert [f.name for f in out.schema.fields] == [
         "query_id", "vec_id", "label", "distance", "rank"

@@ -354,10 +354,10 @@ def main() -> None:
         results["hnsw_recall_scaled"] = measure(hnsw_scaled)
         print(json.dumps({"hnsw_recall_scaled": results["hnsw_recall_scaled"]}), flush=True)
 
-    # knn_join strategy='chunked' with a 100k+ query side (r9 verdict #1):
+    # knn_join's hash-split query blocks with a 100k+ query side:
     # 60 shifted copies of the base 2000 vectors = 120,000 queries at BOTH
-    # scales (above the 100k partial-strategy ceiling — 'partial' refuses
-    # this frame), against the full corpus. Exact brute-force kNN is O(n*q)
+    # scales (above the 50k default chunk_size, so the default path splits
+    # the query side into 3 blocks), against the full corpus. Exact brute-force kNN is O(n*q)
     # by definition, so with q fixed the exponent measures the corpus term
     # (~1.0 expected — the irreducible exact-scan cost; ivf_knn_join is the
     # sublinear ANN alternative). What the entry certifies is the SHAPE:
@@ -375,7 +375,7 @@ def main() -> None:
                 F.col("embedding").alias("query_vec"),
             )
             q = part if q is None else q.unionByName(part)
-        KN.knn_join(emb, q, k=10, metric="cos", strategy="chunked").foreach(
+        KN.knn_join(emb, q, k=10, metric="cos").foreach(
             lambda r: None
         )
 

@@ -26,7 +26,7 @@ def main() -> None:
     spark = get_spark("lantern-time")
     spark.sparkContext.setLogLevel("ERROR")
     qs = E.queries()
-    # warm the JVM/python worker pools the same way ab_bench does
+    # warm the JVM/python worker pools the same way bench.py does
     spark.read.parquet(f"{SF_DIR}/documents.parquet").foreach(lambda r: None)
     spark.read.parquet(f"{SF_DIR}/lineitem.parquet").count()
     spark.range(32).repartition(32).mapInPandas(lambda it: it, "id long").foreach(lambda r: None)
